@@ -155,9 +155,9 @@ class IterationSpec:
     merge_key: str = ""
     extractor: str = "sequential"
     transformer: str = "default"
-    # loader registry key; "pruned" = file-pruned merge for large
-    # range-clustered parquet targets (reference hard-wires
-    # DefaultLoader, main.go:99-100)
+    # loader registry key: "default" (the target's type picks the write
+    # path, pipeline/loaders.py) or "pruned" (the same loader with the
+    # file-pruned merge on, for large range-clustered parquet targets)
     loader: str = "default"
     transformer_parameters: dict[str, Any] = field(default_factory=dict)
     # seed tracking from a pre-populated destination's MAX(key) on

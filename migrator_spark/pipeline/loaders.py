@@ -1,51 +1,56 @@
-"""Named loaders (the reference hard-wires DefaultLoader,
-cmd/migrator/main.go:99-100; here a registry like the other stages).
+"""The CDC loader: the reference's DefaultLoader (loader_default.go:9-72,
+hard-wired in cmd/migrator/main.go:99-100) as one load body that every
+built-in loader name shares.
 
-"default" reproduces loader_default.go:9-72 as set algebra over any
-Source:
+Each batch runs the same steps in order; the target's type picks how
+each step executes:
 
-* batch entirely INSERT and target exists -> append fast path: new
-  part-files only, no rewrite, no shuffle (the reference's batched
-  multi-row INSERT, batched_queries.go:79-156).
-* otherwise -> merge: per-key last-write-wins resolution then
-  survivors ∪ upserts (operators.load.apply_cdc_batch), REMOVE keys
-  dropped — REPLACE/DELETE semantics (batched_queries.go:21-23,28-74)
-  — written atomically as the new table version.
+1. first write: seed the table with the batch's per-key survivors;
+2. additive schema evolution (type conflicts raise before any write);
+3. INSERT-only batch -> append, no rewrite (the reference's batched
+   multi-row INSERT, batched_queries.go:79-156);
+4. otherwise merge: per-key last-write-wins, REMOVE keys dropped —
+   REPLACE/DELETE semantics (batched_queries.go:21-23,28-74).
 
-Scale: the merge broadcasts the (bounded) batch against the large
-target; with a Delta/Iceberg sink the same batch feeds MERGE INTO and
-only matching files rewrite. Transactionality (loader_default.go:30-34):
-the Source's atomic swap plays the per-batch transaction; offsets
-commit after it (runner), so failures replay idempotently.
+By target:
+
+* ``JdbcSource``: ALTER TABLE ADD COLUMN (``evolve_schema``), a staged
+  one-transaction append (``append_txn``) and a staged server-side
+  MERGE in one transaction (``apply_cdc_txn``). The live table is
+  never overwritten from a plan that reads it.
+* ``ParquetSource`` with prune on (the "pruned" loader) and a leading
+  merge key of a footer-comparable type: the seed is range-clustered
+  on the merge key and the merge rewrites only the part-files whose
+  footer key range meets the batch keys (``merge_pruned``). A batch
+  that widens the table takes the full rewrite below, so the evolved
+  table keeps one uniform schema.
+* any other target: ``apply_cdc_batch`` (survivors ∪ upserts) written
+  as the new table version by an atomic overwrite.
+
+"pruned" is a named choice rather than automatic: it trades a per-batch
+key collect plus footer reads for file skipping, which only pays on
+large range-clustered targets. Transactionality (loader_default.go:
+30-34): the sink's atomic swap or JDBC transaction is the per-batch
+transaction; offsets commit after it (runner), so failures replay
+idempotently.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from migrator_spark.operators import extract as ex
 from migrator_spark.operators import load as ld
 from migrator_spark.pipeline.config import IterationSpec, Parameters
 from migrator_spark.pipeline.registries import register_loader
 from migrator_spark.sources.base import Source
-from migrator_spark.sources.parquet import ParquetSource
+from migrator_spark.sources.jdbc import JdbcSource
+from migrator_spark.sources.parquet import _PRUNABLE_KEY_TYPES, ParquetSource
 
 META_COLS = (ex.METHOD_COL, "_order", "_tie")
-
-# Key types whose parquet footer min/max stats Python can compare against
-# driver-collected batch keys without ordering surprises (ADVICE r3:
-# timestamp tz-awareness, bytes-vs-str decode and decimal quantization
-# can all mis-order or raise mid-merge) — everything else takes the
-# full-rewrite default path.
-_PRUNABLE_KEY_TYPES = (
-    T.ByteType,
-    T.ShortType,
-    T.IntegerType,
-    T.LongType,
-    T.StringType,
-)
 
 
 def _method_bound(batch: DataFrame) -> "set[str]":
@@ -70,207 +75,97 @@ def load_default(
     batch: DataFrame,
     it: IterationSpec,
     params: Parameters,
+    prune: bool = False,
 ) -> None:
     key_cols = [c for c in it.merge_key_cols if c in batch.columns]
     data_cols = [c for c in batch.columns if c not in META_COLS]
+    jdbc = isinstance(target, JdbcSource)
+    prune = (
+        prune
+        and isinstance(target, ParquetSource)
+        and bool(key_cols)
+        and isinstance(batch.schema[key_cols[0]].dataType, _PRUNABLE_KEY_TYPES)
+    )
 
+    # 1. first write
     if not target.exists(spark, table):
-        final = ld.latest_by_key(batch, key_cols, "_order", "_tie")
-        target.write(
-            final.filter(F.col(ex.METHOD_COL) != ex.M_REMOVE).select(*data_cols),
-            table,
-            mode="overwrite",
+        seed = (
+            ld.latest_by_key(batch, key_cols, "_order", "_tie")
+            .filter(F.col(ex.METHOD_COL) != ex.M_REMOVE)
+            .select(*data_cols)
         )
+        if prune:
+            # range-clustered on the merge key so every later merge can
+            # prune by footer min/max
+            n_files = max(1, int(params.extra.get("seed_files", 8)))
+            seed = seed.repartitionByRange(
+                n_files, *[F.col(c) for c in key_cols]
+            ).sortWithinPartitions(*key_cols)
+        target.write(seed, table, mode="overwrite")
         return
 
+    # 2. schema evolution
     current = target.table(spark, table)
-    extra_in_batch = set(data_cols) - set(current.columns)
-    missing_in_batch = set(current.columns) - set(data_cols)
-    if not extra_in_batch:
-        methods = _method_bound(batch)
-        if methods <= {ex.M_INSERT}:
-            # append fast path survives a batch MISSING target columns
-            # (a permanently dropped source column must not demote every
-            # later insert batch to a table rewrite): NULL-fill the
-            # missing columns so appended part-files keep the target's
-            # uniform schema
-            ins = batch
-            if missing_in_batch:
-                _, ins = ld.align_schemas(current, batch, META_COLS)
-            target.write(ins.select(*current.columns), table, mode="append")
-            return
-    if extra_in_batch or missing_in_batch:
-        # additive schema evolution (the reference's schema-free rows do
-        # this implicitly): align both sides, merge, and REWRITE when the
-        # batch WIDENS the table so the stored files carry one uniform
-        # evolved schema — appending a wider batch would leave mixed
-        # part-file schemas
-        current, batch = ld.align_schemas(current, batch, META_COLS)
-    merged = ld.apply_cdc_batch(
-        current, batch.select(*current.columns, ex.METHOD_COL, "_order", "_tie"),
-        key_cols, "_order", "_tie",
-    )
+    widens = not set(data_cols) <= set(current.columns)
+    if set(data_cols) != set(current.columns):
+        # align_schemas raises on a type conflict BEFORE any DDL/write
+        current, aligned = ld.align_schemas(current, batch, META_COLS)
+        if jdbc:
+            # new columns become ALTER TABLE ADD COLUMN on the live
+            # table; batch-missing columns need no DDL (the merge
+            # NULLs them via null_cols, inserts leave them default)
+            target.evolve_schema(spark, table, batch.select(*data_cols))
+            widens = False
+        else:
+            # file sinks rebuild the full row: NULL-fill the missing
+            # columns so appended part-files keep the uniform schema (a
+            # permanently dropped source column must not demote every
+            # later insert batch to a table rewrite)
+            batch = aligned
+
+    # 3. INSERT-only append. A batch that WIDENS a file table must
+    # rewrite it instead: appending would leave mixed part-file schemas
+    if not widens and _method_bound(batch) <= {ex.M_INSERT}:
+        if jdbc:
+            # staged single-transaction append, NOT Spark's per-task-
+            # commit append: a partial failure leaves the target
+            # untouched so the un-committed offset replays without dupes
+            target.append_txn(spark, table, batch.select(*data_cols))
+        else:
+            target.write(batch.select(*current.columns), table, mode="append")
+        return
+
+    # 4. merge
+    if jdbc:
+        final = ld.latest_by_key(batch, key_cols, "_order", "_tie")
+        target.apply_cdc_txn(
+            spark,
+            table,
+            final.select(*data_cols, ex.METHOD_COL),
+            key_cols,
+            method_col=ex.METHOD_COL,
+            remove_method=ex.M_REMOVE,
+            null_cols=[c for c in current.columns if c not in data_cols],
+        )
+        return
+    rows = batch.select(*current.columns, *META_COLS)
+    if prune and not widens:
+        # composite keys prune on the LEADING column's footer range — a
+        # correct superset of the files that can hold full-key matches;
+        # apply_cdc_batch keeps the composite semantics on the slice
+        target.merge_pruned(
+            spark,
+            table,
+            batch.select(key_cols[0]),
+            key_cols[0],
+            lambda touched: ld.apply_cdc_batch(
+                touched, rows, key_cols, "_order", "_tie"
+            ),
+            cluster_cols=key_cols,
+        )
+        return
+    merged = ld.apply_cdc_batch(current, rows, key_cols, "_order", "_tie")
     target.write(merged, table, mode="overwrite")
 
 
-@register_loader("jdbc")
-def load_jdbc(
-    spark: SparkSession,
-    target: Source,
-    table: str,
-    batch: DataFrame,
-    it: IterationSpec,
-    params: Parameters,
-) -> None:
-    """Live-database loader: the reference's DefaultLoader against a
-    real JDBC target (loader_default.go:9-72). Pure-INSERT batches
-    append with batched statements; mixed batches resolve per-key
-    last-write-wins then run staging + server-side MERGE/DELETE inside
-    one transaction (JdbcSource.apply_cdc_txn). Falls back to the
-    default set-algebra loader for non-JDBC targets.
-    """
-    from migrator_spark.sources.jdbc import JdbcSource
-
-    if not isinstance(target, JdbcSource):
-        load_default(spark, target, table, batch, it, params)
-        return
-    key_cols = [c for c in it.merge_key_cols if c in batch.columns]
-    data_cols = [c for c in batch.columns if c not in META_COLS]
-
-    if target.exists(spark, table):
-        current = target.table(spark, table)
-        if set(data_cols) != set(current.columns):
-            # additive evolution on the live table: type conflicts
-            # raise here (align_schemas guard) BEFORE any DDL runs;
-            # new columns become ALTER TABLE ADD COLUMN in one txn;
-            # batch-missing columns need no DDL (MERGE leaves them)
-            ld.align_schemas(current, batch, META_COLS)
-            target.evolve_schema(spark, table, batch.select(*data_cols))
-
-    methods = _method_bound(batch)
-    if methods <= {ex.M_INSERT} and target.exists(spark, table):
-        # staged single-transaction append, NOT Spark's per-task-commit
-        # append: a partial failure must leave the target untouched so
-        # the un-committed offset can replay the batch without dupes
-        target.append_txn(spark, table, batch.select(*data_cols))
-        return
-
-    final = ld.latest_by_key(batch, key_cols, "_order", "_tie")
-    if not target.exists(spark, table):
-        target.write(
-            final.filter(F.col(ex.METHOD_COL) != ex.M_REMOVE).select(*data_cols),
-            table,
-            mode="overwrite",
-        )
-        return
-    dropped = (
-        [c for c in target.table(spark, table).columns if c not in data_cols]
-        if target.exists(spark, table)
-        else []
-    )
-    target.apply_cdc_txn(
-        spark,
-        table,
-        final.select(*data_cols, ex.METHOD_COL),
-        key_cols,
-        method_col=ex.METHOD_COL,
-        remove_method=ex.M_REMOVE,
-        null_cols=dropped,
-    )
-
-
-@register_loader("pruned")
-def load_pruned(
-    spark: SparkSession,
-    target: Source,
-    table: str,
-    batch: DataFrame,
-    it: IterationSpec,
-    params: Parameters,
-) -> None:
-    """File-pruned merge loader: same semantics as "default", but the
-    merge rewrites only the part-files whose footer key range intersects
-    the batch keys (ParquetSource.merge_pruned) instead of the whole
-    table — the Delta-MERGE-shaped execution of REPLACE/DELETE
-    (batched_queries.go:21-23,28-74) for large range-clustered targets.
-
-    Composite merge keys (the reference's multi-column PKs,
-    extractor_queue.go:75-90) prune on the LEADING key column's footer
-    range — a correct superset of the files that can hold full-key
-    matches — while ``apply_cdc_batch`` keeps the composite semantics on
-    the rewritten slice.
-
-    Falls back to the default loader when pruning can't apply: non-
-    parquet target, no usable merge key, a leading key column whose type
-    Python can't safely order against parquet footer stats (only
-    integral and string keys prune; timestamps/decimals/binary fall
-    back rather than risk a mis-evaluated intersection), or a target
-    that doesn't exist yet (first write seeds it range-clustered so
-    later merges prune).
-    """
-    key_cols = [c for c in it.merge_key_cols if c in batch.columns]
-    data_cols = [c for c in batch.columns if c not in META_COLS]
-
-    if (
-        not isinstance(target, ParquetSource)
-        or not key_cols
-        or not isinstance(batch.schema[key_cols[0]].dataType, _PRUNABLE_KEY_TYPES)
-    ):
-        load_default(spark, target, table, batch, it, params)
-        return
-    if target.exists(spark, table):
-        cur_cols = target.table(spark, table).columns
-        if set(data_cols) - set(cur_cols):
-            # batch WIDENS the table: the evolved table needs one
-            # uniform schema, so the (rare) evolving batch takes the
-            # full-rewrite path. The rewrite is not range-clustered, so
-            # pruning effectiveness degrades until the next
-            # compaction/recluster — correctness is unaffected (footer
-            # stats of wide files simply prune less).
-            load_default(spark, target, table, batch, it, params)
-            return
-        if set(cur_cols) - set(data_cols):
-            # batch MISSING target columns (dropped source column):
-            # NULL-fill and stay on the pruned fast path — a permanent
-            # drop must not permanently disable pruning
-            _, batch = ld.align_schemas(
-                target.table(spark, table), batch, META_COLS
-            )
-            data_cols = [c for c in batch.columns if c not in META_COLS]
-    key = key_cols[0]
-
-    methods = _method_bound(batch)
-    if methods <= {ex.M_INSERT} and target.exists(spark, table):
-        target.write(batch.select(*data_cols), table, mode="append")
-        return
-
-    if not target.exists(spark, table):
-        final = ld.latest_by_key(batch, key_cols, "_order", "_tie")
-        seeded = final.filter(F.col(ex.METHOD_COL) != ex.M_REMOVE).select(*data_cols)
-        # seed range-clustered on the merge key so every later merge
-        # can prune by footer min/max
-        n_files = max(1, int(params.extra.get("seed_files", 8)))
-        target.write(
-            seeded.repartitionByRange(
-                n_files, *[F.col(c) for c in key_cols]
-            ).sortWithinPartitions(*key_cols),
-            table,
-            mode="overwrite",
-        )
-        return
-
-    cols = target.table(spark, table).columns
-    target.merge_pruned(
-        spark,
-        table,
-        batch.select(key),
-        key,
-        lambda tdf: ld.apply_cdc_batch(
-            tdf,
-            batch.select(*cols, ex.METHOD_COL, "_order", "_tie"),
-            key_cols,
-            "_order",
-            "_tie",
-        ),
-        cluster_cols=key_cols,
-    )
+register_loader("pruned")(partial(load_default, prune=True))

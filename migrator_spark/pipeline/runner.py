@@ -131,6 +131,19 @@ def _store_key(t: Source) -> tuple:
     return (type(t).__name__, id(t))
 
 
+def _check_stage_names(it: IterationSpec) -> None:
+    """Fail at bind time on an unregistered extractor, transformer or
+    loader name. ``_run_batch`` still resolves each name per cycle, so a
+    wrapper registered later (a tracer) still applies."""
+    for kind in ("extractor", "transformer", "loader"):
+        try:
+            resolve(kind, getattr(it, kind))
+        except KeyError as e:
+            raise ValueError(
+                f"iteration on source table {it.source_table!r}: {e.args[0]}"
+            ) from None
+
+
 @dataclass
 class BoundIteration:
     source: Source
@@ -207,6 +220,7 @@ class Migrator:
             tgt = open_source(mig.target_dsn, config.parameters)
             db = db_name_from_dsn(mig.source_dsn)
             for it in mig.iterations:
+                _check_stage_names(it)
                 # validate + normalize rollup entries at bind time so an
                 # unsupported aggregate or a malformed entry fails HERE,
                 # not N batches into a drain (VERDICT r11 #5)
@@ -1057,8 +1071,7 @@ class Migrator:
         from pyspark.sql import functions as F
 
         from migrator_spark.operators import maintenance as mnt
-        from migrator_spark.pipeline.loaders import _PRUNABLE_KEY_TYPES
-        from migrator_spark.sources.parquet import ParquetSource
+        from migrator_spark.sources.parquet import _PRUNABLE_KEY_TYPES, ParquetSource
 
         for srec in staged:
             rl, seq, tgt_table = srec["rollup"], srec["seq"], srec["table"]
@@ -1180,8 +1193,7 @@ class Migrator:
         from pyspark.sql import functions as F
 
         from migrator_spark.operators import maintenance as mnt
-        from migrator_spark.pipeline.loaders import _PRUNABLE_KEY_TYPES
-        from migrator_spark.sources.parquet import ParquetSource
+        from migrator_spark.sources.parquet import _PRUNABLE_KEY_TYPES, ParquetSource
 
         gcols = rl["group_by"]
         lead = gcols[0]

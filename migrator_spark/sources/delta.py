@@ -1,32 +1,18 @@
-"""Delta Lake sink (production upsert path) — import-gated.
+"""Delta Lake source/sink — import-gated.
 
-The parquet Source rewrites the whole table per merge (atomic-swap,
-correct, but write-amplified at 100 TB). With delta-spark available the
-same batch algebra feeds ``MERGE INTO`` instead: only files containing
-matched keys rewrite, the transaction log gives MVCC commits, and the
-runner's offset-after-commit ordering makes delivery exactly-once
-(SURVEY.md §2.11 — Spark fixes the reference's offset-before-load flaw
-structurally).
+Reads, existence checks and whole-table writes over Delta tables under a
+root path, so ``delta://`` DSNs work anywhere a Source does. It is not a
+MERGE sink: the CDC loader (pipeline/loaders.py) treats it like any
+file target — ``apply_cdc_batch`` followed by an overwrite, which Delta
+commits atomically as a new table version.
 
-This container ships no delta-spark, so the class raises ImportError at
-construction and its test skips; the merge-building logic mirrors
-operators/load.py apply_cdc_batch arm-for-arm:
-
-    WHEN MATCHED AND batch._method = 'REMOVE' THEN DELETE
-    WHEN MATCHED                              THEN UPDATE SET *
-    WHEN NOT MATCHED AND _method != 'REMOVE'  THEN INSERT *
-
-(the batch must be per-key resolved first — latest_by_key — or MERGE
-throws on duplicate matches, the same precondition the parquet path
-enforces; /root/reference/batched_queries.go:21-23 relies on MySQL PK
-uniqueness for this).
+Without delta-spark installed, construction raises ImportError that
+points at the parquet:// and jdbc: sinks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from migrator_spark.operators.extract import M_REMOVE, METHOD_COL
 
 
 class DeltaSource:
@@ -55,30 +41,3 @@ class DeltaSource:
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
         df.write.format("delta").mode(mode).save(self._path(name))
-
-    def merge_cdc_batch(
-        self,
-        spark: SparkSession,
-        name: str,
-        batch: DataFrame,
-        key_cols: list[str],
-    ) -> None:
-        """Apply a per-key-resolved CDC batch via MERGE INTO.
-
-        Equivalent to operators.load.apply_cdc_batch followed by a full
-        rewrite, but touches only matched files. The batch broadcasts
-        (bounded by batch_size); Delta's file-level min/max stats prune
-        the target scan to files containing batch keys.
-        """
-        from delta.tables import DeltaTable
-
-        target = DeltaTable.forPath(spark, self._path(name))
-        cond = " AND ".join(f"t.`{c}` = s.`{c}`" for c in key_cols)
-        (
-            target.alias("t")
-            .merge(batch.alias("s"), cond)
-            .whenMatchedDelete(condition=f"s.`{METHOD_COL}` = '{M_REMOVE}'")
-            .whenMatchedUpdateAll(condition=f"s.`{METHOD_COL}` != '{M_REMOVE}'")
-            .whenNotMatchedInsertAll(condition=f"s.`{METHOD_COL}` != '{M_REMOVE}'")
-            .execute()
-        )

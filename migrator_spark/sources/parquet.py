@@ -30,8 +30,8 @@ repointed as a human-friendly cache of the current version.
 
 (Delta/Iceberg add conflict detection at FILE granularity plus a
 catalog; this is the dependency-free equivalent at table-replacement
-granularity, per SURVEY.md §7.4. At cluster scale the parquet sink is
-swapped for the Delta sink in sources/delta.py.)
+granularity, per SURVEY.md §7.4. The Delta source in sources/delta.py
+reads and overwrites Delta tables but has no MERGE path.)
 """
 
 from __future__ import annotations
@@ -51,6 +51,7 @@ from dataclasses import dataclass
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # old versions kept after a swap; bounds how long an in-flight reader
 # holding a resolved version dir stays valid (N further overwrites)
@@ -73,6 +74,19 @@ class MergeStats:
     @property
     def pruned_files(self) -> int:
         return self.total_files - self.touched_files
+
+
+# Key types whose footer min/max stats Python can compare against
+# driver-collected keys without ordering surprises: timestamp
+# tz-awareness, bytes-vs-str decode and decimal quantization can all
+# mis-order or raise mid-merge, so only integral and string keys prune.
+_PRUNABLE_KEY_TYPES = (
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.StringType,
+)
 
 
 def _file_key_range(path: str, key_col: str):

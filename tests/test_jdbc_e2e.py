@@ -90,7 +90,7 @@ def test_pipeline_parquet_to_jdbc_target(spark, derby, tmp_path):
     ParquetSource(f"{tmp_path}/src").write(
         spark.range(1, 6).selectExpr("id", "id*2 as v"), "x"
     )
-    cfg = _cfg(f"parquet://{tmp_path}/src", derby.url, loader="jdbc", batch_size=10)
+    cfg = _cfg(f"parquet://{tmp_path}/src", derby.url, batch_size=10)
     Migrator(spark, cfg, str(tmp_path / "trk")).run_until_drained()
     assert sorted(r["id"] for r in derby.table(spark, "x").collect()) == [1, 2, 3, 4, 5]
 
@@ -106,6 +106,33 @@ def test_jdbc_cdc_merge_transaction(spark, derby):
     got = {r["id"]: r["v"] for r in derby.table(spark, "t").collect()}
     assert got[3] == 999 and got[100] == 42 and 7 not in got
     assert len(got) == 10  # 10 - 1 removed + 1 inserted
+
+
+@pytest.mark.parametrize("loader", ["default", "pruned"])
+def test_loader_mixed_batch_into_jdbc_keeps_untouched_rows(spark, derby, loader):
+    """A REPLACE/REMOVE batch through the registered loader into a live
+    JDBC table changes only the touched keys. Overwriting the table from
+    a lazy plan that reads that same table would truncate it first and
+    leave almost nothing behind."""
+    from migrator_spark.pipeline.config import IterationSpec, Parameters
+    from migrator_spark.pipeline.registries import resolve
+
+    derby.write(spark.range(10).selectExpr("id", "id*2 as v"), "mix")
+    batch = (
+        spark.createDataFrame(
+            # key 4 changes twice: the later event wins
+            [(3, 999, "REPLACE", 1), (7, 0, "REMOVE", 2), (4, 1, "REPLACE", 3),
+             (4, 444, "REPLACE", 4), (100, 42, "INSERT", 5)],
+            "id long, v long, _method string, _order long",
+        )
+        .withColumn("_tie", F.lit(0))
+    )
+    it = IterationSpec(source_table="mix", source_key="id", target_table="mix")
+    resolve("loader", loader)(spark, derby, "mix", batch, it, Parameters())
+    got = {r["id"]: r["v"] for r in derby.table(spark, "mix").collect()}
+    want = {i: i * 2 for i in range(10) if i != 7}
+    want.update({3: 999, 4: 444, 100: 42})
+    assert got == want
 
 
 def test_jdbc_merge_rolls_back_atomically(spark, derby):
@@ -159,7 +186,7 @@ def test_jdbc_loader_append_is_transactional_and_batchsize_wired(spark, derby, t
     from migrator_spark.pipeline.config import from_dict
     from migrator_spark.sources.base import open_source
 
-    cfg = _cfg(f"parquet://{tmp_path}/src", derby.url, loader="jdbc",
+    cfg = _cfg(f"parquet://{tmp_path}/src", derby.url,
                 batch_size=10, insert_batch_size=7)
     tgt = open_source(cfg.migrations[0].target_dsn, cfg.parameters)
     assert tgt.batch_size == 7  # loader_default.go:12 InsertBatchSize
@@ -230,7 +257,7 @@ def test_jdbc_schema_evolution_end_to_end(spark, derby):
         .withColumn("_tie", F.lit(0))
     )
     it = IterationSpec(source_table="evt", source_key="id", target_table="evt")
-    LOADERS["jdbc"](spark, derby, "evt", batch, it, Parameters())
+    LOADERS["default"](spark, derby, "evt", batch, it, Parameters())
     got = {
         r["id"]: (r["name"], r["score"]) for r in derby.table(spark, "evt").collect()
     }
@@ -249,7 +276,7 @@ def test_jdbc_schema_evolution_end_to_end(spark, derby):
         .withColumn("_order", F.col("id"))
         .withColumn("_tie", F.lit(0))
     )
-    LOADERS["jdbc"](spark, derby, "evt", batch2, it, Parameters())
+    LOADERS["default"](spark, derby, "evt", batch2, it, Parameters())
     got = {
         r["id"]: (r["name"], r["score"]) for r in derby.table(spark, "evt").collect()
     }
@@ -268,7 +295,7 @@ def test_jdbc_schema_evolution_end_to_end(spark, derby):
         .withColumn("_tie", F.lit(0))
     )
     with pytest.raises(ValueError, match="type conflict"):
-        LOADERS["jdbc"](spark, derby, "evt", bad, it, Parameters())
+        LOADERS["default"](spark, derby, "evt", bad, it, Parameters())
 
 
 def test_evolve_schema_mysql_emits_one_multi_add_alter(spark):

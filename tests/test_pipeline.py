@@ -250,6 +250,28 @@ def test_yaml_config_reference_shape(tmp_path):
     assert cfg.migrations[0].source_dsn == "parquet:///data/a"
 
 
+@pytest.mark.parametrize(
+    "stage, name", [("loader", "jdbc"), ("extractor", "sequentail")]
+)
+def test_unknown_stage_name_fails_at_construction(spark, tmp_path, stage, name):
+    """An unregistered stage name fails when the config is bound, naming
+    the registered choices, instead of on every cycle of a running
+    worker."""
+    cfg = from_dict(
+        {
+            "migrations": [
+                {
+                    "source": {"dsn": f"parquet://{tmp_path}/a", "table": "x", "key": "id"},
+                    "target": {"dsn": f"parquet://{tmp_path}/b", "table": "x"},
+                    stage: name,
+                }
+            ],
+        }
+    )
+    with pytest.raises(ValueError, match=f"unknown {stage} '{name}'; registered: "):
+        Migrator(spark, cfg, str(tmp_path / "trk"))
+
+
 def test_timestamp_extractor_incremental(spark, dirs):
     """E2 pipeline path: only rows past the persisted timestamp offset
     are re-extracted; REPLACE upserts keep the target deduplicated."""
@@ -561,13 +583,14 @@ def test_continuous_queue_cdc_convergence(spark, dirs):
 
 def test_all_example_configs_parse():
     """Every shipped example YAML must load through the config parser
-    and resolve a registered extractor/transformer."""
+    and resolve a registered extractor/transformer/loader."""
     import glob
 
     import migrator_spark.pipeline.extractors  # noqa: F401 - registers
+    import migrator_spark.pipeline.loaders  # noqa: F401 - registers
     import migrator_spark.pipeline.transformers  # noqa: F401 - registers
     from migrator_spark.pipeline.config import load_config
-    from migrator_spark.pipeline.registries import EXTRACTORS, TRANSFORMERS
+    from migrator_spark.pipeline.registries import EXTRACTORS, LOADERS, TRANSFORMERS
 
     files = sorted(glob.glob("examples/*.yml"))
     assert len(files) >= 4
@@ -577,6 +600,7 @@ def test_all_example_configs_parse():
             for it in mig.iterations:
                 assert it.extractor in EXTRACTORS, (f, it.extractor)
                 assert it.transformer in TRANSFORMERS, (f, it.transformer)
+                assert it.loader in LOADERS, (f, it.loader)
 
 
 def _sleepy_transform(batch, ctx):

@@ -213,29 +213,28 @@ def test_dropped_column_keeps_append_fast_path(spark, tmp_path):
 
 def test_dropped_column_keeps_pruned_path(spark, tmp_path, monkeypatch):
     """The pruned loader must NOT permanently fall back to full rewrite
-    for batches missing a dropped column: load_default is never called
-    once the key is prunable and only drops are involved."""
-    import migrator_spark.pipeline.loaders as L
-
+    for batches missing a dropped column: the merge still runs through
+    merge_pruned once the key is prunable and only drops are involved."""
     tgt = ParquetSource(str(tmp_path))
     seed = _batch(
         spark,
         [(i, f"n{i}", i * 10, "INSERT") for i in range(1, 9)],
         "id long, name string, score long, _m string",
     )
-    L.load_pruned(spark, tgt, "x", seed, IT, PARAMS)
+    LOADERS["pruned"](spark, tgt, "x", seed, IT, PARAMS)
 
     calls = []
+    merge_pruned = ParquetSource.merge_pruned
     monkeypatch.setattr(
-        L, "load_default", lambda *a, **k: calls.append(1) or (_ for _ in ()).throw(
-            AssertionError("fell back to load_default")
-        )
+        ParquetSource,
+        "merge_pruned",
+        lambda self, *a, **k: calls.append(1) or merge_pruned(self, *a, **k),
     )
     batch = _batch(
         spark, [(3, "c3", "REPLACE")], "id long, name string, _m string"
     )
-    L.load_pruned(spark, tgt, "x", batch, IT, PARAMS)
-    assert not calls
+    LOADERS["pruned"](spark, tgt, "x", batch, IT, PARAMS)
+    assert calls == [1]
     out = {r["id"]: (r["name"], r["score"]) for r in tgt.table(spark, "x").collect()}
     assert out[3] == ("c3", None) and out[1] == ("n1", 10) and len(out) == 8
 
