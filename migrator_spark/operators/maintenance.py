@@ -14,7 +14,9 @@ rows and the target rows they replace — O(batch), not O(table).
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -129,26 +131,31 @@ def rollup_delta(
     )
 
 
+def null_safe_cond(left: str, right: str, cols: list[str]):
+    """Join condition ``left.c <=> right.c`` for every ``c`` in
+    ``cols``, on the two sides' aliases. NULL-SAFE because groupBy
+    treats NULL as a real group, so a rollup patch must too: a plain
+    equi-join never matches the NULL group. eqNullSafe is still an
+    equi-join expression, so broadcast hash joins are kept."""
+    return functools.reduce(
+        operator.and_,
+        (F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols),
+    )
+
+
 def apply_rollup_delta(
     rollup: DataFrame, delta: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Patch ``rollup`` with a staged delta; groups whose count reaches
     0 drop, matching a recompute.
 
-    The join is NULL-SAFE on the group columns (round 11): groupBy
-    treats NULL as a real group, so the patch must too — a plain
-    equi-join never matches the NULL group and would SPLIT it into a
-    stale row plus a delta-only row, silently diverging from the
-    recompute the moment a nullable group-by column holds NULLs.
-    eqNullSafe is still an equi-join expression, so the broadcast hash
-    join is preserved."""
+    The join is NULL-SAFE on the group columns (``null_safe_cond``):
+    a plain equi-join would SPLIT the NULL group into a stale row plus
+    a delta-only row, silently diverging from the recompute the moment
+    a nullable group-by column holds NULLs."""
     r, d = rollup.alias("r"), F.broadcast(delta).alias("d")
-    cond = None
-    for c in group_cols:
-        e = F.col(f"r.{c}").eqNullSafe(F.col(f"d.{c}"))
-        cond = e if cond is None else cond & e
     return (
-        r.join(d, cond, "full_outer")
+        r.join(d, null_safe_cond("r", "d", group_cols), "full_outer")
         .select(
             *[
                 F.when(F.col(f"d.{c}").isNotNull(), F.col(f"d.{c}"))
@@ -210,12 +217,8 @@ def scoped_minmax_recompute(
     if len(non_null) < len(lead_values):  # the NULL group is touched
         pred = pred | F.col(lead).isNull()
     t, g = target.filter(pred).alias("t"), F.broadcast(groups).alias("g")
-    cond = None
-    for c in group_cols:
-        e = t[c].eqNullSafe(g[c])
-        cond = e if cond is None else cond & e
     return (
-        t.join(g, cond, "left_semi")
+        t.join(g, null_safe_cond("t", "g", group_cols), "left_semi")
         .groupBy(*group_cols)
         .agg(
             aggfn(F.col(value_col).cast("decimal(18,2)")).alias(vcol),

@@ -39,7 +39,7 @@ from migrator_spark.pipeline.config import (
 from migrator_spark.pipeline.registries import resolve
 from migrator_spark.pipeline.tracking import TrackingStore
 from migrator_spark.pipeline.transformers import TransformContext
-from migrator_spark.sources.base import Source, open_source
+from migrator_spark.sources.base import Source, open_source, rmw
 
 
 # Recompute-path rollup writes range-cluster the table at this many
@@ -59,6 +59,13 @@ ROLLUP_GROUPS_PER_FILE = 4096
 # the apply takes the plain O(|groups|) overwrite, which is the cheaper
 # bound there (SCALE.md §5f).
 ROLLUP_PRUNE_MAX_TOUCHED = 0.05
+
+
+def _range_cluster(df, group_cols: list[str], n_groups: int):
+    """``df`` range-partitioned and sorted on the group key at
+    ROLLUP_GROUPS_PER_FILE groups per part-file (1 to 32 files)."""
+    files = max(1, min(32, -(-n_groups // ROLLUP_GROUPS_PER_FILE)))
+    return df.repartitionByRange(files, *group_cols).sortWithinPartitions(*group_cols)
 
 
 class State(Enum):
@@ -462,7 +469,7 @@ class Migrator:
     # they are not retraction-safe under the delta algebra, so the
     # stage step records the batch's TOUCHED-GROUP set instead of a
     # delta, and the apply re-aggregates those groups from the
-    # POST-load target (scoped recompute, _apply_minmax). That apply is
+    # POST-load target (scoped recompute, _apply_rollup). That apply is
     # an idempotent function of the loaded table, and the staged set
     # only ever needs to be a superset of the truly touched groups, so
     # every crash window below is safe WITHOUT a fingerprint — a
@@ -499,14 +506,24 @@ class Migrator:
     # associative, which is what makes patch == recompute independent
     # of batch cuts.
     #
-    # APPLY cost (VERDICT r10 #3): for parquet targets the delta patch
-    # goes through ParquetSource.merge_pruned — only part-files whose
-    # footer range intersects the touched group keys rewrite, the rest
-    # carry forward as hardlinks — so per-batch apply I/O is
-    # O(files containing touched groups), not O(|groups|). The full
-    # rewrite remains only for non-parquet sinks, non-prunable group
-    # key types, and the (rare) recompute path, which seeds the table
-    # range-clustered so subsequent merges prune.
+    # APPLY cost (VERDICT r10 #3, r11 #7): the aggregate families
+    # differ only in their patch, and one step (_patch_rollup) applies
+    # it. On a parquet sink the patch goes through
+    # ParquetSource.merge_pruned — only part-files whose footer range of
+    # the leading group column intersects the touched leads rewrite, the
+    # rest carry forward as hardlinks — so per-batch apply I/O is
+    # O(files containing touched groups), not O(|groups|), and the
+    # prune guard's group count is a footer read, not a scan. It prunes
+    # when the lead type has exact footer ranges, no NULL lead is
+    # touched, and the batch's distinct leads are at most
+    # ROLLUP_PRUNE_MAX_TOUCHED of the groups. Otherwise the apply is
+    # one full rewrite through sources.base.rmw: on parquet it is
+    # range-clustered (ADVICE r11 #3) and sized from the footer rows
+    # plus the touched leads, so the next localized batch prunes again;
+    # on an in-place store (JDBC) it is materialized before the
+    # overwrite, which would otherwise truncate the rollup table the
+    # patch still reads. The recompute path seeds the table
+    # range-clustered by a blind write.
 
     def _rollup_tables(self, target_table: str, name: str) -> tuple[str, str]:
         base = f"{target_table}__rollup_{name}"
@@ -1043,276 +1060,158 @@ class Migrator:
             *gcols
         )
         touched = old_groups.unionByName(new_groups).dropDuplicates(gcols)
-        if b.target.exists(self.spark, stage_t):
-            st = b.target.table(self.spark, stage_t)
+        if not b.target.exists(self.spark, stage_t):
+            b.target.write(
+                touched.withColumn("_seq", F.lit(expected)), stage_t, mode="overwrite"
+            )
+            return
+
+        def restage(st):
+            new = touched
             if "_seq" in st.columns and set(gcols) <= set(st.columns):
-                prev = st.agg(F.max("_seq")).first()[0]
-                if prev is not None and int(prev) > applied:
-                    # unapplied leftover from a crashed attempt: keep
-                    # its groups in the superset
-                    touched = touched.unionByName(
-                        st.select(*gcols)
-                    ).dropDuplicates(gcols)
-        b.target.write(
-            touched.withColumn("_seq", F.lit(expected)), stage_t, mode="overwrite"
-        )
+                # an unapplied leftover from a crashed attempt: keep its
+                # groups in the superset
+                leftover = st.filter(F.col("_seq") > applied).select(*gcols)
+                new = new.unionByName(leftover).dropDuplicates(gcols)
+            return new.withColumn("_seq", F.lit(expected))
 
-    @staticmethod
-    def _null_safe_cond(left, right, cols: list[str]):
-        from pyspark.sql import functions as F
-
-        cond = None
-        for c in cols:
-            e = left[c].eqNullSafe(right[c])
-            cond = e if cond is None else cond & e
-        return cond
+        # the new set reads the old one: on an in-place store (JDBC) a
+        # plain overwrite would truncate the leftover before reading it
+        rmw(b.target, self.spark, stage_t, restage)
 
     def _apply_rollups(self, b: BoundIteration, spec: IterationSpec, staged: list[dict]) -> None:
-        from pyspark.sql import functions as F
-
-        from migrator_spark.operators import maintenance as mnt
-        from migrator_spark.sources.parquet import _PRUNABLE_KEY_TYPES, ParquetSource
-
         for srec in staged:
-            rl, seq, tgt_table = srec["rollup"], srec["seq"], srec["table"]
-            group_cols = rl["group_by"]
-            data_t, stage_t = self._rollup_tables(tgt_table, rl["name"])
-            if not srec["recompute"] and self._rollup_seq(b.target, data_t) >= seq:
-                continue  # already applied; replay must not double-count
-            if rl["agg"] not in ("sum", "avg"):
-                self._apply_minmax(b, tgt_table, rl, seq, srec["recompute"])
-                continue
-            out_cols = [
-                *group_cols,
-                F.col("sum_val").cast("decimal(28,2)").alias("sum_val"),
-                F.col("n_rows").cast("long").alias("n_rows"),
-            ]
-            if srec["recompute"]:
-                cast = F.col(rl["column"]).cast("decimal(18,2)").alias("_rsum")
-                new = mnt.compute_rollup(
-                    b.target.table(self.spark, tgt_table).select(
-                        *group_cols, cast
-                    ),
-                    group_cols,
-                    "_rsum",
-                ).select(*out_cols).withColumn("_seq", F.lit(seq))
-                self._write_rollup_clustered(b, data_t, new, group_cols)
-                continue
-            delta = (
-                b.target.table(self.spark, stage_t)
-                .filter(F.col("_seq") == seq)
-                .drop("_seq", "_fp_n", "_fp_hash")
-            )
-            lead = group_cols[0]
-            n_touched = None
-            # the lead type comes from the DELTA's schema (same origin
-            # column as the rollup table's), not a .table() open of the
-            # rollup — steady state must not touch the full table at
-            # all (VERDICT r11 #7)
-            prunable = isinstance(b.target, ParquetSource) and isinstance(
-                delta.schema[lead].dataType, _PRUNABLE_KEY_TYPES
-            )
-            if prunable:
-                dkeys = delta.select(lead).cache()
-                # one job over the O(batch) delta: touched-key count +
-                # NULL presence; the GROUP count comes from the rollup
-                # table's parquet footers — a driver-side metadata read,
-                # NOT a per-batch Spark scan of the whole rollup table
-                # (VERDICT r11 #7: the prune guard must not itself cost
-                # a table scan)
-                trow = dkeys.agg(
-                    F.count(F.lit(1)),
-                    F.max(F.col(lead).isNull().cast("int")),
-                ).first()
-                n_touched, has_null = int(trow[0]), bool(trow[1])
-                n_groups = b.target.footer_num_rows(data_t)
-                if (
-                    # footer stats can't represent NULL keys, so a NULL
-                    # group in the delta would miss its existing rollup
-                    # row and double-insert — such batches full-rewrite
-                    has_null
-                    # pruning pays only for key-LOCALIZED batches; see
-                    # ROLLUP_PRUNE_MAX_TOUCHED
-                    or n_touched > ROLLUP_PRUNE_MAX_TOUCHED * max(n_groups, 1)
-                ):
-                    prunable = False
-                    dkeys.unpersist()
-            if prunable:
-                b.target.merge_pruned(
-                    self.spark,
-                    data_t,
-                    dkeys,
-                    lead,
-                    lambda touched, d=delta, oc=out_cols, s=seq: (
-                        mnt.apply_rollup_delta(
-                            touched.drop("_seq"), d, group_cols
-                        )
-                        .select(*oc)
-                        .withColumn("_seq", F.lit(s))
-                    ),
-                    cluster_cols=group_cols,
-                )
-                dkeys.unpersist()
-                continue
-            cur = b.target.table(self.spark, data_t).drop("_seq")
-            new = (
-                mnt.apply_rollup_delta(cur, delta, group_cols)
-                .select(*out_cols)
-                .withColumn("_seq", F.lit(seq))
-            )
-            # full rewrite through the range-clustering writer (ADVICE
-            # r11 #3): a plain overwrite here would lose the footer-range
-            # layout one spread batch at a time, so every batch after it
-            # would prune poorly or not at all. File sizing from footer
-            # stats + touched count — no second materialization of `new`.
-            hint = None
-            if isinstance(b.target, ParquetSource):
-                hint = b.target.footer_num_rows(data_t) + (n_touched or 1)
-            self._write_rollup_clustered(
-                b, data_t, new, group_cols, n_groups_hint=hint
-            )
+            self._apply_rollup(b, srec)
 
-    def _apply_minmax(
-        self, b: BoundIteration, tgt_table: str, rl: dict, seq: int, recompute: bool
-    ) -> None:
-        """Apply a min/max rollup by SCOPED RECOMPUTE of the staged
-        touched-group set against the POST-load target (the
-        retraction-safety answer for non-invertible aggregates,
-        VERDICT r11 #5): groups outside the set are untouched by the
-        batch and keep their rows; groups inside are re-aggregated from
-        the target — the only state that can name the new extremum
-        after a retraction — and groups that lost all rows drop.
-        Idempotent by construction, so every crash-replay window is
-        safe without a fingerprint.
-
-        Cost: O(target rows in touched groups) per batch, read through
-        a pushed-down IN-filter on the leading group column (row-group
-        skipping on a group-clustered target) plus a broadcast semi-
-        join for exactness; the rollup-table update file-prunes
-        exactly like the sum path."""
+    def _apply_rollup(self, b: BoundIteration, srec: dict) -> None:
+        """Publish one staged rollup batch. Every aggregate family runs
+        the same two paths and differs only in its aggregate and its
+        patch: the recompute re-aggregates the whole target; the steady
+        state patches the rollup table through ``_patch_rollup`` —
+        ``sum``/``avg`` add the staged delta, ``min``/``max`` replace
+        the staged touched groups with a scoped recompute of them from
+        the post-load target (retraction-safe: the new extremum after a
+        REMOVE lives in rows no delta saw)."""
         from pyspark.sql import functions as F
 
         from migrator_spark.operators import maintenance as mnt
-        from migrator_spark.sources.parquet import _PRUNABLE_KEY_TYPES, ParquetSource
 
-        gcols = rl["group_by"]
-        lead = gcols[0]
-        aggfn = F.min if rl["agg"] == "min" else F.max
-        vcol = f"{rl['agg']}_val"
+        rl, seq, tgt_table = srec["rollup"], srec["seq"], srec["table"]
+        gcols, agg = rl["group_by"], rl["agg"]
         data_t, stage_t = self._rollup_tables(tgt_table, rl["name"])
+        if not srec["recompute"] and self._rollup_seq(b.target, data_t) >= seq:
+            return  # already applied; replay must not double-count
+        # avg is stored as its sum components (maintenance.read_rollup)
+        minmax = agg in ("min", "max")
+        vcol = f"{agg}_val" if minmax else "sum_val"
         out_cols = [
             *gcols,
-            F.col(vcol).cast("decimal(18,2)").alias(vcol),
+            F.col(vcol).cast("decimal(18,2)" if minmax else "decimal(28,2)").alias(vcol),
             F.col("n_rows").cast("long").alias("n_rows"),
         ]
-        if recompute:
-            cast = F.col(rl["column"]).cast("decimal(18,2)")
+        if srec["recompute"]:
+            aggfn = {"min": F.min, "max": F.max}.get(agg, F.sum)
             new = (
                 b.target.table(self.spark, tgt_table)
                 .groupBy(*gcols)
-                .agg(aggfn(cast).alias(vcol), F.count(F.lit(1)).alias("n_rows"))
-                .select(*out_cols)
-                .withColumn("_seq", F.lit(seq))
+                .agg(
+                    aggfn(F.col(rl["column"]).cast("decimal(18,2)")).alias(vcol),
+                    F.count(F.lit(1)).alias("n_rows"),
+                )
             )
-            self._write_rollup_clustered(b, data_t, new, gcols)
+            self._write_rollup_clustered(
+                b, data_t, new.select(*out_cols).withColumn("_seq", F.lit(seq)), gcols
+            )
             return
-        groups = (
-            b.target.table(self.spark, stage_t)
-            .filter(F.col("_seq") == seq)
-            .drop("_seq")
-        )
-        # the staged set is batch-bounded (≤ 2 groups per batch key,
-        # plus crash leftovers), so its leading values collect safely;
-        # they push down as an IN filter so a group-clustered target
-        # reads only the row groups that can hold touched rows
-        leads = [r[0] for r in groups.select(lead).distinct().collect()]
-        scoped = mnt.scoped_minmax_recompute(
-            b.target.table(self.spark, tgt_table),
-            groups,
+        touched = b.target.table(self.spark, stage_t).filter(F.col("_seq") == seq)
+        if minmax:
+            touched = touched.drop("_seq")
+            target = b.target.table(self.spark, tgt_table)
+
+            def patch(cur, leads):
+                scoped = mnt.scoped_minmax_recompute(
+                    target, touched, gcols, rl["column"], agg, leads
+                )
+                survivors = cur.alias("r").join(
+                    F.broadcast(touched).alias("g"),
+                    mnt.null_safe_cond("r", "g", gcols),
+                    "left_anti",
+                )
+                cols = [*gcols, vcol, "n_rows"]
+                return survivors.select(*cols).unionByName(scoped.select(*cols))
+        else:
+            touched = touched.drop("_seq", "_fp_n", "_fp_hash")
+
+            def patch(cur, _leads):
+                return mnt.apply_rollup_delta(cur, touched, gcols)
+
+        self._patch_rollup(
+            b,
+            data_t,
+            touched,
             gcols,
-            rl["column"],
-            rl["agg"],
-            leads,
-        ).select(*out_cols)
-        prunable = (
-            isinstance(b.target, ParquetSource)
-            and isinstance(
-                groups.schema[lead].dataType, _PRUNABLE_KEY_TYPES
-            )
-            and all(v is not None for v in leads)
-            and len(leads)
-            <= ROLLUP_PRUNE_MAX_TOUCHED
-            * max(b.target.footer_num_rows(data_t), 1)
+            lambda cur, leads: patch(cur.drop("_seq"), leads)
+            .select(*out_cols)
+            .withColumn("_seq", F.lit(seq)),
         )
 
-        def _patch(cur, g=groups, s=scoped):
-            gbr = F.broadcast(g).alias("g")
-            kept = cur.alias("r")
-            survivors = kept.join(
-                gbr, self._null_safe_cond(kept, gbr, gcols), "left_anti"
-            ).select(*gcols, vcol, "n_rows")
-            return survivors.unionByName(s.select(*gcols, vcol, "n_rows"))
+    def _patch_rollup(
+        self, b: BoundIteration, data_t: str, touched, gcols: list[str], patch
+    ) -> None:
+        """Replace rollup table ``data_t`` by ``patch(cur, leads)``:
+        ``touched`` is the batch's staged frame (sum delta or min/max
+        group set), ``leads`` its distinct leading group values,
+        collected once (the staged frame is batch-bounded). Prune or
+        full rewrite as the protocol comment's APPLY cost says."""
+        from migrator_spark.sources.parquet import _PRUNABLE_KEY_TYPES, ParquetSource
 
-        if prunable:
-            b.target.merge_pruned(
-                self.spark,
-                data_t,
-                groups.select(lead),
-                lead,
-                lambda touched: _patch(touched.drop("_seq"))
-                .select(*out_cols)
-                .withColumn("_seq", F.lit(seq)),
-                cluster_cols=gcols,
-            )
-            return
-        cur = b.target.table(self.spark, data_t).drop("_seq")
-        new = _patch(cur).select(*out_cols).withColumn("_seq", F.lit(seq))
+        lead = gcols[0]
+        # one row per touched group already: dedupe here, no shuffle
+        leads = list(dict.fromkeys(r[0] for r in touched.select(lead).collect()))
         hint = None
         if isinstance(b.target, ParquetSource):
-            hint = b.target.footer_num_rows(data_t) + len(leads)
-        self._write_rollup_clustered(b, data_t, new, gcols, n_groups_hint=hint)
+            n_groups = b.target.footer_num_rows(data_t)
+            if (
+                isinstance(touched.schema[lead].dataType, _PRUNABLE_KEY_TYPES)
+                # footer stats can't represent NULL keys, so a NULL
+                # group would miss its existing row and double-insert
+                and all(v is not None for v in leads)
+                and len(leads) <= ROLLUP_PRUNE_MAX_TOUCHED * max(n_groups, 1)
+            ):
+                b.target.merge_pruned(
+                    self.spark,
+                    data_t,
+                    touched.select(lead),
+                    lead,
+                    lambda cur: patch(cur, leads),
+                    cluster_cols=gcols,
+                )
+                return
+            hint = n_groups + len(leads)
+
+        def rewrite(cur):
+            new = patch(cur, leads)
+            return new if hint is None else _range_cluster(new, gcols, hint)
+
+        rmw(b.target, self.spark, data_t, rewrite)
 
     def _write_rollup_clustered(
-        self,
-        b: BoundIteration,
-        data_t: str,
-        new,
-        group_cols: list[str],
-        n_groups_hint: int | None = None,
+        self, b: BoundIteration, data_t: str, new, group_cols: list[str]
     ) -> None:
-        """Full rollup write; for parquet sinks the table is
-        RANGE-CLUSTERED on the group key so every later delta apply can
-        file-prune (footer min/max of the leading group column).
-
-        ``n_groups_hint`` sizes the file count without materializing
-        ``new`` twice (cache + count + write): the steady-state
-        full-rewrite callers pass the CURRENT table's footer row count
-        plus the batch's touched-group count — an upper bound within
-        one batch of exact, and file sizing only needs the right order
-        of magnitude. The recompute path (no trustworthy prior table)
-        passes None and pays the one cache+count."""
-        from pyspark.sql import functions as F
-
+        """Recompute-path rollup write: a blind overwrite (``new`` reads
+        the target, not the rollup table). A parquet sink gets the table
+        RANGE-CLUSTERED on the group key, sized by one cache+count of
+        ``new``, so every later patch can file-prune."""
         from migrator_spark.sources.parquet import ParquetSource
 
         if not isinstance(b.target, ParquetSource):
             b.target.write(new, data_t, mode="overwrite")
             return
-        if n_groups_hint is None:
-            new = new.cache()
-            n_groups = new.count()
-        else:
-            n_groups = n_groups_hint
-        files = max(1, min(32, -(-n_groups // ROLLUP_GROUPS_PER_FILE)))
+        new = new.cache()
         b.target.write(
-            new.repartitionByRange(
-                files, *[F.col(c) for c in group_cols]
-            ).sortWithinPartitions(*group_cols),
-            data_t,
-            mode="overwrite",
+            _range_cluster(new, group_cols, new.count()), data_t, mode="overwrite"
         )
-        if n_groups_hint is None:
-            new.unpersist()
+        new.unpersist()
 
     # ---------------------------------------------------------- drain
 

@@ -1202,7 +1202,7 @@ def mnt3_minmax_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path's delta algebra — a REMOVE of the row holding a group's
     current maximum cannot be patched, because the new maximum lives
     in rows no delta ever saw — so the runner runs the scoped-recompute
-    protocol instead (runner._stage_minmax_groups/_apply_minmax): each
+    protocol instead (runner._stage_minmax_groups/_apply_rollup): each
     batch stages its touched-GROUP set before the load, and after the
     load those groups alone are re-aggregated from the target. The
     fixture's queue mixes UPDATEs (+1000 balance moves that can both

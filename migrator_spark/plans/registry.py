@@ -664,124 +664,6 @@ REGISTRY: dict[str, QuerySpec] = {
 # steady-state cycle is ~4 rounds, so the SLO holds with one round of
 # slack; if the registry outgrows ~250 entries, widen the window or
 # accept a 6-round SLO — change the number HERE, in writing.
-# Round-11 compliance: the 18 r6-green leftovers (q6..pr11, 5 rounds
-# stale — the SLO boundary) are IN this round's window; after it
-# grades, the stalest rows are the 23 r7-green leftovers (q15..cur3,
-# 5 rounds stale by round 12) — they MUST head round 12's window.
-#
-# ---------------------------------------------------------------------------
-# Round-12 graded window (stalest-first round-robin).
-#
-# Composition (VERDICT r11 #2, executed exactly as queued at the
-# round-11 window's comment):
-#   1. Plan-changed this round: mnt2_runner_maintained_rollup — the
-#      stage fingerprint now covers PAYLOAD columns (VERDICT r11 #1 /
-#      ADVICE r11 #1, clears the `weak` mark), the steady-state seq +
-#      prune-guard reads moved to parquet footers (VERDICT r11 #7),
-#      and the full-rewrite apply re-range-clusters (ADVICE r11 #3).
-#   2. NEW round-12 entries: mnt3_minmax_rollup (the non-invertible
-#      aggregate arm — max maintained by staged-touched-groups scoped
-#      recompute, VERDICT r11 #5) and art5_warm_bpe_read (the learned
-#      tokenizer through the artifact store, VERDICT r11 #3).
-#   3. The 25-row r7-green SLO block (q13..cur3 — 5 rounds stale by
-#      now, the staleness SLO's boundary), exactly as VERDICT r11 #2
-#      lists them.
-#   4. r8-green backfill in round-8 window order (stalest first),
-#      topped to exactly 50: sim15..st5.
-# Round 13's queue head: mnt4_avg_from_rollup (landed after this
-# window settled, never driver-graded), then the r8-green remainder
-# (f1, f2, f3, dd1, dd5, dd7, dd9, sim2, ta10, dd10, dd11, mx2, ev7,
-# ev8, dq2, fo2, fo3, sim7, sim8, q2, q11, q16, q22 — 23 rows, 5
-# rounds stale by r13: the SLO boundary again), then the r9-green
-# family, stalest first.
-# ---------------------------------------------------------------------------
-_ROUND12_WINDOW: list[str] = [
-    # -- plan-changed round 12 (payload fingerprint + footer-stats
-    # steady state + clustered full rewrite) --
-    "mnt2_runner_maintained_rollup",
-    # -- NEW round 12 --
-    "mnt3_minmax_rollup",  # NEW: min/max arm via scoped recompute
-    "art5_warm_bpe_read",  # NEW: learned tokenizer via the store
-    # -- r7-stale SLO block (VERDICT r11 #2's queued 25) --
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "q23_priority_pivot",
-    "ev1_event_gaps",
-    "ev2_asof_join",
-    "ev3_range_join",
-    "ev4_gap_fill",
-    "ev5_funnel",
-    "ev6_retention",
-    "sk1_salted_event_stats",
-    "sk2_salted_user_join",
-    "fo1_snapshot_diff",
-    "set1_repeat_customers",
-    "pr1_profile_orders",
-    "pr4_price_histogram",
-    "pr5_stat_moments",
-    "dd6b_dup_clusters_star",
-    "q24_priority_unpivot",
-    "q25_grouping_sets",
-    "cur3_neardup_mix",
-    # -- r8-green backfill, round-8 window order (stalest first) --
-    "sim15_ivf_multiprobe_topk",
-    "pr14_stream_served_heavy_hitters",
-    "q10_returned_items",
-    "l0_apply_cdc_batch",
-    "l2_upsert_lastwins",
-    "l3_remove_antijoin",
-    "l4_pruned_merge",
-    "a1_max_offset",
-    "a2_ts_offset",
-    "a3_coalesce_offset",
-    "a5_group_by_method",
-    "s1_queue_topk",
-    "p6_composite_lookup",
-    "p7_tracking_lookup",
-    "p8_full_row_delete_match",
-    "w1_latest_by_key",
-    "t2_rename_routing",
-    "st1_windowed_counts",
-    "st2_session_windows",
-    "st3_stateful_first_seen",
-    "st4_stream_dedup",
-    "st5_interval_join",
-    # (f1_scalar_suite..q22_global_sales_opportunity — the 23-row
-    # r8-green remainder — lead round 13's queue)
-]
-
-# ---------------------------------------------------------------------------
-# Round-13 graded window (stalest-first round-robin).
-#
-# Composition (VERDICT r12 #2, executed exactly as queued at the
-# round-12 window's comment, plus the SLO's plan-changed rule):
-#   1. mnt4_avg_from_rollup at the head — landed after the r12 window
-#      settled, never driver-graded (VERDICT r12 "what's missing" #2).
-#   2. Plan-changed this round (SLO: re-enter immediately):
-#      mnt2/mnt3 — their executed runner path gained the
-#      cross-process sequencer claim + release lifecycle and the
-#      avg-as-sum dispatch (VERDICT r12 #1/#8); art5 — the tokenizer
-#      store layout moved to the single versioned tagged table
-#      (ADVICE r12 #3), so its publish/read path is new code.
-#   3. NEW round-13 entries: mnt5_avg_rollup_serving (`avg:` config
-#      sugar end-to-end, VERDICT r12 #8) and
-#      art6_tokenizer_version_drift (the retrain migration loop,
-#      VERDICT r12 #4).
-#   4. The 23-row r8-green SLO block (f1..q22 — 5 rounds stale, the
-#      staleness SLO's boundary), exactly as VERDICT r12 #2 lists
-#      them.
-#   5. r9-green backfill in round-9 window order (stalest first),
-#      topped to exactly 50: cur12..dd8.
-# Round 14's queue head: the r9-green remainder in round-9 window
-# order (dd8, sim1, sim5, sim3, w2, w3, fts2, ch1, cur5, fts3, dr1,
-# cur6, sh1, bpe1, dv1, dr2, ta11, vb1, sim10, ev9, ev10, ta12, seg1,
-# mm6, sm6 — 25 rows, 5 rounds stale by r14: the SLO boundary), then
-# r10-green stalest-first.
 # ---------------------------------------------------------------------------
 _GRADED_WINDOW: list[str] = [
     # ======== round-14 window (stalest-first round-robin) ========
@@ -858,522 +740,6 @@ _GRADED_WINDOW: list[str] = [
     "st6_late_funnel_stream",
 ]
 
-# ---------------------------------------------------------------------------
-# Round-13 graded window (kept for history; superseded above).
-# ---------------------------------------------------------------------------
-_ROUND13_WINDOW: list[str] = [
-    # -- never driver-graded (r12 post-window) --
-    "mnt4_avg_from_rollup",
-    # -- plan-changed round 13 (sequencer claims + avg dispatch in the
-    # runner path; tokenizer store re-layout under art5) --
-    "mnt2_runner_maintained_rollup",
-    "mnt3_minmax_rollup",
-    "art5_warm_bpe_read",
-    # -- NEW round 13 --
-    "mnt5_avg_rollup_serving",  # NEW: avg config sugar through the runner
-    "art6_tokenizer_version_drift",  # NEW: tokenizer retrain migration
-    # -- r8-stale SLO block (VERDICT r12 #2's queued 23) --
-    "f1_scalar_suite",
-    "f2_json_props",
-    "f3_date_parts",
-    "dd1_exact_dedup",
-    "dd5_embedding_neardup",
-    "dd7_simhash_pairs",
-    "dd9_chunk_boilerplate",
-    "sim2_ivf_topk",
-    "ta10_gopher_gate",
-    "dd10_dup_spans",
-    "dd11_despan",
-    "mx2_epoch_plan",
-    "ev7_sessionize",
-    "ev8_transition_matrix",
-    "dq2_spend_outliers",
-    "fo2_scd2_history",
-    "fo3_asof_snapshot",
-    "sim7_pq_encode",
-    "sim8_pq_adc_topk",
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q16_supplier_part_counts",
-    "q22_global_sales_opportunity",
-    # -- r9-green backfill, round-9 window order (stalest first) --
-    "cur12_carried_cluster_ids",
-    "sm8_leakage_safe_split",
-    "cur10_release_manifest",
-    "st6_late_funnel_stream",
-    "fo6_scd2_validity_audit",
-    "cur11_release_fate_diff",
-    "mm12_keyframe_select",
-    "ev17_window_funnel4",
-    "q2w_top_supplier_per_nation",
-    "mm5_payload_dedup",
-    "dd3_simhash",
-    "sm4_three_way_split",
-    "pk1_sequence_packing",
-    "dd2_minhash_lsh_pairs",
-    "cur2_training_mix",
-    "pk2_incremental_packing",
-    "cur4_pack_curated",
-    "sim9_recall_eval",
-    "dq3_replica_checksum",
-    "dd6_dup_clusters",
-    # plan-changed late in round 13: the shingle-index WRITE path
-    # gained flock+mkdir version allocation (concurrent builders take
-    # distinct versions) and age-graced orphan pruning — art1
-    # exercises publish -> sidecar re-registration end-to-end, so it
-    # re-enters and displaces dd8_incremental_lsh to round 14's queue
-    "art1_warm_artifact_read",
-    # (dd8_incremental_lsh + sim1_cosine_topk..sm6_temporal_split —
-    # the 25-row r9-green remainder — lead round 14's queue)
-]
-
-# ---------------------------------------------------------------------------
-# Round-11 graded window (kept for history; superseded above).
-#
-# Composition (VERDICT r10 #1, executed exactly as queued at the old
-# window's comment):
-#   1. The six entries that landed after the round-10 window settled
-#      and were never driver-graded: art2, mnt1, mnt2, art3, bpe2,
-#      bpe3. mnt2 ALSO changed plan this round (stage fingerprint +
-#      routed-target keying + file-pruned apply, VERDICT r10 #3/#4,
-#      ADVICE r10 #1/#2) and bpe2/bpe3's trainer was refactored onto
-#      the shared _bpe_merge_step — the regrade discipline would put
-#      all three back regardless.
-#   2. NEW round-11 entries: bpe4 (the tokenizer serving row, VERDICT
-#      r10 #6), art4 (the two-level quantizer's warm-read seam,
-#      VERDICT r10 #5), pk3 (packing by served BPE token counts — the
-#      bpe4->pk1 composition), and bpe5 (documents -> vocab-id
-#      streams, the loop's last serving step).
-#   3. The 18-row r6-green SLO block (q6..pr11) — 5 rounds stale by
-#      now, the STALENESS SLO's boundary (see above).
-#   4. r7-green backfill in round-7 window order (stalest first),
-#      topped to exactly 50: pr12..q12.
-# Round 12's queue head: the r7-green remainder (q13, q14, q15, q17,
-# q18, q20, q21, q23, ev1–ev6, sk1, sk2, fo1, set1, pr1, pr4, pr5,
-# dd6b, q24, q25, cur3 — 25 rows, 5 rounds stale by r12: the SLO
-# boundary again), then the r8-green family, stalest first.
-# ---------------------------------------------------------------------------
-_ROUND11_WINDOW: list[str] = [
-    # -- never driver-graded (landed post-r10-window; VERDICT r10 #1);
-    # mnt2 also plan-changed round 11 --
-    "art2_warm_pair_graph_read",
-    "mnt1_incremental_rollup",
-    "mnt2_runner_maintained_rollup",
-    "art3_warm_quantizer_read",
-    "bpe2_train_merges",
-    "bpe3_fertility",
-    # -- NEW round 11 --
-    "bpe4_apply_heldout",  # NEW: tokenizer serving on held-out text
-    "art4_warm_two_level_read",  # NEW: two-level codebooks via the store
-    "pk3_bpe_packing",  # NEW: packing by served BPE token counts
-    "bpe5_encode_corpus",  # NEW: documents -> vocab-id streams (+unk rule)
-    # -- r6-stale SLO block (the staleness SLO's first compliance test) --
-    "q6_forecast_revenue",
-    "q7_trade_volume",
-    "q8_rollup_sales",
-    "q8c_cube_orders",
-    "q19_disjunctive_filter",
-    "cur8_best_copy_dedup",
-    "ds1_dsir_weights",
-    "sd1_semdedup",
-    "cur9_dsir_select",
-    "pr7_psi_drift",
-    "mm8_jpeg_roundtrip",
-    "sd3_stream_semdedup_batch",
-    "ds2_dsir_unseen",
-    "mm9_image_features",
-    "pr10_bloom_membership",
-    "sim11_two_level_quantizer",
-    "sd4_semdedup_two_level",
-    "pr11_count_min",
-    # -- r7-green backfill, round-7 window order (stalest first) --
-    "pr12_heavy_hitters",
-    "pr13_kmv_setops",
-    "mm10_mjpeg_frames",
-    "mm11_audio_features",
-    "sim12_gemm_topk",
-    "ev15_window_funnel",
-    "dq4_referential_audit",
-    "sim13_two_level_recall",
-    "ev16_rolling_active_users",
-    "ta14_pmi_collocations",
-    "fo5_bitemporal_asof",
-    "sim14_multiprobe_recall",
-    "sd5_stream_semdedup_two_level",
-    "pr9_sampled_quantiles",
-    "sm7_stratified_sample",
-    "e1_seq_scan",
-    "e2_ts_scan_onlypast",
-    "e3_coalesce_scan",
-    "e4_queue_drain",
-    "e4_point_lookup_join",
-    "q9_product_profit",
-    "q12_priority_lateness",
-    # (q13_customer_distribution and q14_promo_effect displaced by the
-    # pk3/bpe5 head insertions — they lead round 12's r7-green queue
-    # with the q15..cur3 block)
-]
-
-# ---------------------------------------------------------------------------
-# Round-10 graded window (kept for history; superseded above).
-#
-# Composition:
-#   1. NEW round-10 entry art1_warm_artifact_read (the offline
-#      artifact store's warm-read seam, VERDICT r9 #2) and
-#      pipeline_e2e_drain, whose PLAN changed this round (fixture
-#      build hoisted out of the timed row into a session-shared
-#      prebuild + per-run file clone, VERDICT r9 #6; batch floor
-#      dropped so the drain is multi-cycle at every SF, ADVICE r9 #4).
-#   2. VERDICT r9 #1's prescribed rotation: the five entries that
-#      landed after the round-9 window settled and were never
-#      driver-graded (ev18, dq5, cur13, fo7, pr15), the four r5-green
-#      rows the dd4/dd12/dd13/ta9 regrade displaced (vb2, ev11, fo4,
-#      sd2), then the r5-green remainder (dc2, ev13, ev14, mm7, fts4,
-#      pr8).
-#   3. The four shared-shingle-index consumers (dd4, dd12, dd13,
-#      ta9): their scan CHANGED AGAIN this round — the index table is
-#      now published under a versioned directory with an atomic
-#      sidecar swap (VERDICT r9 #4), so the scan node's location and
-#      catalog name differ from round 9's. Outputs are pinned
-#      bit-identical in tests, but the regrade discipline applies.
-#   4. r6-stale backfill in registry order (f4..q4), topped to 50.
-# NOT re-windowed despite being touched: st6/pr14/st3's
-# awaitTermination fix (ADVICE r9 #2) changes only the
-# stalled-drain ERROR path — same plan, same results, and a stall now
-# raises instead of grading partial output, so the change cannot turn
-# a would-be failure into a pass.
-# Round 11's queue head: art2_warm_pair_graph_read,
-# mnt1_incremental_rollup, mnt2_runner_maintained_rollup and
-# art3_warm_quantizer_read, bpe2_train_merges and bpe3_fertility
-# (landed after this window settled, never driver-graded), then the
-# 18 r6-green leftovers
-# (q6, q7, q8, q8c, q19, cur8, ds1, sd1, cur9, pr7, mm8, sd3, ds2,
-# mm9, pr10, sim11, sd4, pr11 — the SLO block above), then the
-# r7-green family, stalest first.
-# ---------------------------------------------------------------------------
-_ROUND10_WINDOW: list[str] = [
-    # -- NEW round 10 / plan-changed round 10 (head) --
-    "art1_warm_artifact_read",  # NEW: offline-store warm read, driver-hashed
-    "pipeline_e2e_drain",  # plan changed: fixture amortized + floorless batch
-    # -- never driver-graded (landed post-r9-window; VERDICT r9 #1) --
-    "ev18_growth_accounting",
-    "dq5_profile_drift",
-    "cur13_carried_split",
-    "fo7_scd2_repair",
-    "pr15_federated_quantile_merge",
-    # -- displaced from round 9's window (VERDICT r9 #1) --
-    "vb2_oov_rate",
-    "ev11_funnel",
-    "fo4_retention_cohorts",
-    "sd2_incremental_semdedup",
-    # -- r5-stale remainder --
-    "dc2_contamination_spans",
-    "ev13_conversion_latency",
-    "ev14_last_touch",
-    "mm7_png_roundtrip",
-    "fts4_proximity_search",
-    "pr8_portable_hll",
-    # -- plan changed round 10: versioned shingle-index publish
-    # (VERDICT r9 #4) moved the bucketed scan's location + catalog
-    # name; outputs pinned bit-identical, but the regrade discipline
-    # applies --
-    "dd4_ngram_jaccard_pairs",
-    "dd12_containment_pairs",
-    "dd13_edit_distance_pairs",
-    "ta9_similar_docs",
-    # -- r6-stale backfill, registry order (SLO block) --
-    "f4_string_suite",
-    "f5_array_suite",
-    "f6_regex_suite",
-    "sim4_incremental_topk",
-    "ta1_token_stats",
-    "ta2_quality_score",
-    "ta3_lang_guess",
-    "ta4_fingerprint",
-    "ta5_repetition",
-    "ta6_pii_scrub",
-    "pr2_length_percentiles",
-    "fts1_keyword_search",
-    "dq1_constraint_audit",
-    "sm1_hash_sample",
-    "sm2_stratified_sample",
-    "sm3_weighted_sample",
-    "cur1_curation_pipeline",
-    "mm1_decode_metadata",
-    "mm2_frame_sample",
-    "mm3_resize_plan",
-    "mm4_extract_features",
-    "dc1_decontaminate",
-    "ta7_lm_quality",
-    "sim6_hyperplane_topk",
-    "mx1_mixture_plan",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "q4_order_priority",
-]
-
-# ---------------------------------------------------------------------------
-# Round-9 graded window (kept for history; superseded above).
-#
-# Composition:
-#   1. NEW round-9 entries (pipeline_e2e_drain — the full runner pass,
-#      VERDICT r8 #7; cur12_carried_cluster_ids — release-carried
-#      stable cluster identity, VERDICT r8 #2) and the three entries
-#      whose PLAN or ORACLE changed this round: sm8/cur10 (split key
-#      re-derived from the cluster's min content fingerprint — regrade
-#      the new key end-to-end) and st6 (sleep-free deterministic batch
-#      cut + eager materialization — regrade the identical-semantics
-#      claim).
-#   2. VERDICT r8 #1's prescribed rotation: the four entries that
-#      landed after the round-8 window settled and were never
-#      driver-graded (fo6, cur11, mm12, ev17), the five displaced from
-#      round 8's head insertions (q2w, mm5, dd3, sm4, pk1), the two
-#      r4-stale rows (dd2, cur2), then the r5-stale family in registry
-#      order (pk2..sm6).
-#   3. The four shared-shingle-index consumers (dd4, dd12, dd13, ta9):
-#      their PLAN changed late in round 9 — the index is now a
-#      bucketed parquet table, not a localCheckpoint (scan node
-#      changed on both self-join sides; measured 6.5x consumer win) —
-#      so the regrade discipline puts them back in the window, at the
-#      cost of displacing the last four r5-stale backfills.
-# Round 10's queue head: the FIVE post-window round-9 entries, never
-# driver-graded (ev18_growth_accounting, dq5_profile_drift,
-# cur13_carried_split, fo7_scd2_repair,
-# pr15_federated_quantile_merge — all oracle-green in this round's
-# full sf0.01 and sf0.1 differentials), then the r5-green rows the
-# dd4/dd12/dd13/ta9 regrade displaced (vb2, ev11, fo4, sd2), then the
-# r5-green remainder (dc2, ev13, ev14, mm7, fts4, pr8), then the
-# r6-green family (stalest first).
-# ---------------------------------------------------------------------------
-_ROUND9_WINDOW: list[str] = [
-    # -- NEW round 9 / plan-changed round 9 (head) --
-    "pipeline_e2e_drain",  # NEW: the orchestration stack end-to-end
-    "cur12_carried_cluster_ids",  # NEW: growth-stable cluster identity
-    "sm8_leakage_safe_split",  # plan+oracle changed: min-fingerprint key
-    "cur10_release_manifest",  # plan+oracle changed: min-fingerprint key
-    "st6_late_funnel_stream",  # plan changed: sleep-free batch cut
-    # -- never driver-graded (landed post-r8-window; VERDICT r8 #1) --
-    "fo6_scd2_validity_audit",
-    "cur11_release_fate_diff",
-    "mm12_keyframe_select",
-    "ev17_window_funnel4",
-    # -- displaced from round 8's window (VERDICT r8 #1) --
-    "q2w_top_supplier_per_nation",
-    "mm5_payload_dedup",
-    "dd3_simhash",
-    "sm4_three_way_split",
-    "pk1_sequence_packing",
-    # -- r4-stale (newest driver row = round 4) --
-    "dd2_minhash_lsh_pairs",
-    "cur2_training_mix",
-    # -- r5-stale family, registry order, stalest block first --
-    "pk2_incremental_packing",
-    "cur4_pack_curated",
-    "sim9_recall_eval",
-    "dq3_replica_checksum",
-    "dd6_dup_clusters",
-    "dd8_incremental_lsh",
-    "sim1_cosine_topk",
-    "sim5_ivf_build",
-    "sim3_pairwise_topk",
-    "w2_window_suite",
-    "w3_rolling_frames",
-    "fts2_bm25_search",
-    "ch1_overlap_chunks",
-    "cur5_token_budget",
-    "fts3_passage_search",
-    "dr1_source_dup_report",
-    "cur6_domain_cap",
-    "sh1_train_shards",
-    "bpe1_pair_stats",
-    "dv1_ngram_diversity",
-    "dr2_cross_source_leakage",
-    "ta11_lang_confusion",
-    "vb1_vocab_coverage",
-    "sim10_ivf_pq_topk",
-    "ev9_daily_top_events",
-    "ev10_top_user_paths",
-    "ta12_doc_keywords",
-    "seg1_rfm_segments",
-    "mm6_wav_roundtrip",
-    "sm6_temporal_split",
-    # -- plan changed round 9 (shared shingle index now a bucketed
-    # parquet table instead of a localCheckpoint — scan node changed
-    # on both self-join sides; outputs pinned bit-identical, but the
-    # regrade discipline applies) --
-    "dd4_ngram_jaccard_pairs",
-    "dd12_containment_pairs",
-    "dd13_edit_distance_pairs",
-    "ta9_similar_docs",
-]
-
-# ---------------------------------------------------------------------------
-# Round-8 graded window (kept for history; superseded above).
-#
-# Composition:
-#   1. NEW round-8 entries (sim15 multi-probe IVF serving, pr14
-#      stream-served heavy hitters, st6 late-data funnel stream) and
-#      dd12, whose PLAN changed this round (it now consumes the shared
-#      materialized shingle index — regrade the bit-identity claim).
-#   2. VERDICT r7 #1's prescribed rotation: q10_returned_items (r3 —
-#      the registry's single stalest row) + the r4-stale family — the
-#      §2 CDC core (l0/l2/l3/l4, a1-a3/a5, s1, p6-p8, w1, t2, st1-st5,
-#      f1-f3), dd1/dd5/dd7/dd9, sim2, ta9/ta10, dd10/dd11, mx2,
-#      ev7/ev8, dq2, fo2/fo3, sim7/sim8, TPC-H q2/q11/q16/q22, and
-#      dd4 — which, with dd13 (swapped in for the prescribed q2w) and
-#      ta9, doubles as a shared-shingle-index regrade.
-# Displaced to round 9's backfill head by the four head insertions:
-# q2w, mm5, dd3 (judge-listed; mm5's family carries fresher r7
-# evidence via mm10/mm11, q2w's plan core is graded via q2, and dd3's
-# simhash kernel is exercised inside dd7_simhash_pairs which stays)
-# and the two r5 top-ups (sm4, pk1).
-# ---------------------------------------------------------------------------
-# Round-7 window (kept for history; superseded below).
-#
-# Composition, stalest first by newest driver-green row (CORRECTNESS_r0*):
-#   1. NEW round-7 operators (pr12 heavy hitters, pr13 KMV set ops,
-#      mm10 MJPEG/AVI, mm11 audio features) plus never-graded sd5
-#      (landed at the end of round 6) and the entries whose PLAN or
-#      ORACLE changed after the round-6 grading run (dd12's
-#      count-aggregated rewrite — VERDICT r6 #3 wants the
-#      bit-identical regrade; pr9's integer-rational ranks, ADVICE r6
-#      #1; sm7's sentinel-join oracle, ADVICE r6 #2).
-#   2. The r3-stale core (newest driver-green row = round 3, four
-#      rounds ago, while the read path gained OCC commits, executor
-#      package shipping, and the NTZ conf underneath them) — VERDICT
-#      r6 #1: e1-e4 (the reference's ENTIRE extractor surface), the
-#      TPC-H ten displaced by round 6's window, ev1-ev6, sk1/sk2, fo1,
-#      set1, pr1/pr4/pr5, dd6b, q24/q25.
-#   3. Backfill from the OLDEST r4-green block in registry order
-#      (cur3..q2w) up to exactly 50.
-# pr3/pr6 are RETIRED (module docstring) — no graded slot, no registry
-# row; their exact twins pr8-pr12 carry the graded evidence.
-# Tail queue for round 8: the r4-green remainder (q2, q16, q11, q22,
-# p6-p8, a1-a5, l0-l4, w1, st1-st5, dd1-dd9, sim2, f1-f3, t2, s1),
-# then the r5-green family, then round 6's head as it ages.
-_ROUND8_WINDOW: list[str] = [
-    # -- NEW round 8 / plan-changed round 8 (head) --
-    "sim15_ivf_multiprobe_topk",  # NEW: the nprobe knob on the serving path
-    "pr14_stream_served_heavy_hitters",  # NEW: probe of the LIVE CM stream state
-    "st6_late_funnel_stream",  # NEW: watermark reorder buffer vs the batch oracle
-    "dd12_containment_pairs",  # plan changed: consumes the shared shingle index
-    # -- the r3-stale single + the r4-stale family (VERDICT r7 #1) --
-    "q10_returned_items",
-    "l0_apply_cdc_batch",
-    "l2_upsert_lastwins",
-    "l3_remove_antijoin",
-    "l4_pruned_merge",
-    "a1_max_offset",
-    "a2_ts_offset",
-    "a3_coalesce_offset",
-    "a5_group_by_method",
-    "s1_queue_topk",
-    "p6_composite_lookup",
-    "p7_tracking_lookup",
-    "p8_full_row_delete_match",
-    "w1_latest_by_key",
-    "t2_rename_routing",
-    "st1_windowed_counts",
-    "st2_session_windows",
-    "st3_stateful_first_seen",
-    "st4_stream_dedup",
-    "st5_interval_join",
-    "f1_scalar_suite",
-    "f2_json_props",
-    "f3_date_parts",
-    "dd1_exact_dedup",
-    "dd4_ngram_jaccard_pairs",  # also a shared-shingle-index regrade
-    "dd5_embedding_neardup",
-    "dd7_simhash_pairs",
-    "dd9_chunk_boilerplate",
-    "sim2_ivf_topk",
-    "ta9_similar_docs",  # also a shared-shingle-index regrade
-    "ta10_gopher_gate",
-    "dd10_dup_spans",
-    "dd11_despan",
-    "mx2_epoch_plan",
-    "ev7_sessionize",
-    "ev8_transition_matrix",
-    "dq2_spend_outliers",
-    "fo2_scd2_history",
-    "fo3_asof_snapshot",
-    "sim7_pq_encode",
-    "sim8_pq_adc_topk",
-    "dd13_edit_distance_pairs",  # also a shared-shingle-index regrade
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q16_supplier_part_counts",
-    "q22_global_sales_opportunity",
-]
-
-_ROUND7_WINDOW: list[str] = [
-    # -- NEW round 7 / graded-contract-changed round 7 (head) --
-    "pr12_heavy_hitters",  # NEW: CM-backed exact heavy hitters
-    "pr13_kmv_setops",  # NEW: KMV/theta set-operation estimates (ladder's set rung)
-    "mm10_mjpeg_frames",  # NEW: real AVI demux + per-frame JPEG decode
-    "mm11_audio_features",  # NEW: real PCM decode + windowed audio features
-    "sim12_gemm_topk",  # NEW: GEMM-pruned exact batch top-k
-    "ev15_window_funnel",  # NEW: sliding-window max-depth funnel
-    "sm8_leakage_safe_split",  # NEW: near-dup-group-aware train/val split
-    "dq4_referential_audit",  # NEW: FK orphan/null audit, all 8 edges
-    "sim13_two_level_recall",  # NEW: recall@10 of the two-level IVF probe
-    "ev16_rolling_active_users",  # NEW: sliding 7-day WAU/DAU via expansion
-    "ta14_pmi_collocations",  # NEW: integer-micro-nat PMI collocations
-    "cur10_release_manifest",  # NEW: cluster->keep-one->split->pack release
-    "fo5_bitemporal_asof",  # NEW: two-clock as-of reconstruction
-    "sim14_multiprobe_recall",  # NEW: the IVF nprobe recall curve, graded
-    "sd5_stream_semdedup_two_level",  # landed post-r6-grading, never graded
-    "dd12_containment_pairs",  # prefix-filtered verify (VERDICT r6 #3): regrade bit-identical
-    "pr9_sampled_quantiles",  # integer-rational ranks (ADVICE r6 #1): regrade
-    "sm7_stratified_sample",  # sentinel-join oracle (ADVICE r6 #2): regrade
-    # -- r3-stale core (newest driver row = round 3; VERDICT r6 #1) --
-    "e1_seq_scan",
-    "e2_ts_scan_onlypast",
-    "e3_coalesce_scan",
-    "e4_queue_drain",
-    "e4_point_lookup_join",
-    "q9_product_profit",
-    "q12_priority_lateness",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "q23_priority_pivot",
-    "ev1_event_gaps",
-    "ev2_asof_join",
-    "ev3_range_join",
-    "ev4_gap_fill",
-    "ev5_funnel",
-    "ev6_retention",
-    "sk1_salted_event_stats",
-    "sk2_salted_user_join",
-    "fo1_snapshot_diff",
-    "set1_repeat_customers",
-    "pr1_profile_orders",
-    "pr4_price_histogram",
-    "pr5_stat_moments",
-    "dd6b_dup_clusters_star",
-    "q24_priority_unpivot",
-    "q25_grouping_sets",
-    # -- r4-green backfill (oldest r4 block, registry order) --
-    "cur3_neardup_mix",
-    # (sim7/sim8/dd11/ta10/dq2/fo2/ev7/mx2/dd10/ta9 displaced by the
-    # round-7b head insertions sim12/ev15/sm8/dq4/sim13/ev16/ta14/
-    # cur10/fo5/sim14, and mm5/q2w by the earlier pr13/mm11 ones —
-    # all twelve lead round 8's backfill)
-]
-
-assert len(_ROUND7_WINDOW) == 50, len(_ROUND7_WINDOW)
-assert len(_ROUND8_WINDOW) == 50, len(_ROUND8_WINDOW)
-assert len(_ROUND9_WINDOW) == 50, len(_ROUND9_WINDOW)
-assert len(_ROUND10_WINDOW) == 50, len(_ROUND10_WINDOW)
-assert len(_ROUND11_WINDOW) == 50, len(_ROUND11_WINDOW)
-assert len(_ROUND12_WINDOW) == 50, len(_ROUND12_WINDOW)
-assert len(_ROUND13_WINDOW) == 50, len(_ROUND13_WINDOW)
 assert len(_GRADED_WINDOW) == 50, len(_GRADED_WINDOW)
 assert len(set(_GRADED_WINDOW)) == 50
 _missing = [n for n in _GRADED_WINDOW if n not in REGISTRY]

@@ -181,8 +181,9 @@ def _lock_for(path: str) -> _TableLock:
 # same dir. The append fast path adds part-files to the CURRENT version
 # dir, so the key carries the parquet file count: an append changes the
 # count and forces one re-inference (schema-preserving by the loader
-# contract, but the cache does not assume it). Bounded FIFO — soak
-# loops mint fresh fixture roots per run.
+# contract, but the cache does not assume it). A dir holding a
+# subdirectory bypasses the cache: the count sees only the top level.
+# Bounded FIFO — soak loops mint fresh fixture roots per run.
 _SCHEMA_CACHE: "dict[str, tuple[int, object]]" = {}
 _SCHEMA_CACHE_MAX = 512
 
@@ -191,9 +192,12 @@ def _read_parquet_dir(spark: SparkSession, d: str) -> DataFrame:
     """spark.read.parquet(d) without the per-read schema-inference job
     when this process has read the same (immutable) dir before."""
     try:
-        n = sum(1 for e in os.scandir(d) if e.name.endswith(".parquet"))
+        entries = list(os.scandir(d))
     except OSError:
         return spark.read.parquet(d)  # let Spark raise its own error
+    if any(e.is_dir() for e in entries):
+        return spark.read.parquet(d)
+    n = sum(1 for e in entries if e.name.endswith(".parquet"))
     hit = _SCHEMA_CACHE.get(d)
     if hit is not None and hit[0] == n:
         return spark.read.schema(hit[1]).parquet(d)

@@ -135,6 +135,96 @@ def test_loader_mixed_batch_into_jdbc_keeps_untouched_rows(spark, derby, loader)
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "agg,crash", [("sum", False), ("max", False), ("max", True)],
+    ids=["sum", "max", "max-apply-crash"],
+)
+def test_rollup_into_jdbc_keeps_untouched_groups(spark, derby, tmp_path, agg, crash):
+    """A maintained rollup on a JDBC target, two batches, the second
+    touching a strict subset of the groups: the rollup equals a
+    recompute over the target. Overwriting the rollup table from a plan
+    that reads it would truncate it first and keep only the touched
+    groups. The crash case fails the first apply after the load
+    committed: the replay must keep the staged group set of the crashed
+    attempt (id 6's old group 0, which the post-load target no longer
+    shows), so the staged-set rewrite must not truncate it either."""
+    from datetime import datetime
+
+    src = ParquetSource(f"{tmp_path}/src")
+    t1, t2 = datetime(2024, 1, 1), datetime(2024, 1, 2)
+    # groups 0: {3, 6}, 1: {1, 4}, 2: {2, 5}; id 6 holds group 0's max
+    src.write(
+        spark.createDataFrame(
+            [(i, i % 3, i * 10, t1) for i in range(1, 7)],
+            "id long, grp long, v long, ts timestamp",
+        ),
+        "x",
+    )
+    cfg = MigratorConfig(
+        migrations=[
+            MigrationSpec(
+                source_dsn=f"parquet://{tmp_path}/src",
+                target_dsn=derby.url,
+                iterations=[
+                    IterationSpec(
+                        source_table="x",
+                        source_key="ts",
+                        merge_key="id",
+                        target_table="x",
+                        extractor="timestamp",
+                        rollups=[{"name": "g", "group_by": ["grp"], agg: "v"}],
+                    )
+                ],
+            )
+        ],
+        parameters=Parameters(batch_size=100),
+    )
+    m = Migrator(spark, cfg, str(tmp_path / "trk"))
+    m.run_until_drained()  # batch 1: recompute over all three groups
+    # batch 2 moves id 6 from group 0 to group 1: group 2 is untouched
+    src.write(
+        src.table(spark, "x").withColumn(
+            "grp", F.when(F.col("id") == 6, F.lit(1)).otherwise(F.col("grp"))
+        ).withColumn(
+            "ts", F.when(F.col("id") == 6, F.lit(t2)).otherwise(F.col("ts"))
+        ),
+        "x",
+    )
+    if crash:
+        real_apply = m._apply_rollups
+
+        def crash_once(b, spec, staged):
+            m._apply_rollups = real_apply
+            raise RuntimeError("injected apply crash (post-load)")
+
+        m._apply_rollups = crash_once
+        _more, failed = m._run_batch(m.iterations[0], cfg.parameters, strict=False)
+        assert failed
+    m.run_until_drained()
+
+    vcol = f"{agg}_val"
+    got = sorted(
+        (r["grp"], float(r[vcol]), r["n_rows"])
+        for r in derby.table(spark, "x__rollup_g").collect()
+    )
+    aggfn = F.sum if agg == "sum" else F.max
+    want = sorted(
+        (r["grp"], float(r[vcol]), r["n_rows"])
+        for r in derby.table(spark, "x")
+        .groupBy("grp")
+        .agg(
+            aggfn(F.col("v").cast("decimal(18,2)")).alias(vcol),
+            F.count(F.lit(1)).alias("n_rows"),
+        )
+        .collect()
+    )
+    assert want == {  # the scenario really moved id 6
+        "sum": [(0, 30.0, 1), (1, 110.0, 3), (2, 70.0, 2)],
+        "max": [(0, 30.0, 1), (1, 60.0, 3), (2, 50.0, 2)],
+    }[agg]
+    assert got == want
+
+
 def test_jdbc_merge_rolls_back_atomically(spark, derby):
     derby.write(spark.range(5).selectExpr("id", "id*2 as v"), "r")
     before = sorted(map(tuple, derby.table(spark, "r").collect()))

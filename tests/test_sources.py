@@ -272,3 +272,27 @@ def test_nanos_cols_cache_invalidates_on_rewrite(spark, tmp_path):
     )
     os.utime(p)  # ensure mtime_ns moves even on coarse filesystems
     assert _nanos_timestamp_cols(p) == ()
+
+
+def test_parquet_dir_schema_cache_bypassed_for_nested_layout(spark, tmp_path):
+    """The parquet-dir schema cache keys on the count of top-level
+    part-files, which a nested (partition-directory) layout never
+    changes: such a dir must re-infer its schema on every read, or a
+    rewritten partition replays the stale one."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq_
+
+    from migrator_spark.sources.parquet import _read_parquet_dir
+
+    d = tmp_path / "t"
+    (d / "p=1").mkdir(parents=True)
+    pq_.write_table(pa.table({"id": [1]}), d / "p=1" / "part-0.parquet")
+    assert _read_parquet_dir(spark, str(d)).columns == ["id", "p"]
+    shutil.rmtree(d / "p=1")
+    (d / "p=1").mkdir()
+    pq_.write_table(
+        pa.table({"id": [1], "name": ["a"]}), d / "p=1" / "part-0.parquet"
+    )
+    assert _read_parquet_dir(spark, str(d)).columns == ["id", "name", "p"]
