@@ -151,8 +151,9 @@ def queue_drain(
 
     Mirrors extractor_queue.go:35-36 (filter to this db.table, ORDER BY
     timestampUpdated LIMIT n) with an explicit tiebreaker for
-    determinism. orderBy+limit compiles to TakeOrderedAndProject — a
-    per-partition top-k then a k-row merge, never a full sort shuffle.
+    determinism; the ``queue`` extractor drains through it. orderBy+limit
+    compiles to TakeOrderedAndProject — a per-partition top-k then a
+    k-row merge, never a full sort shuffle.
     """
     out = queue
     if source_database is not None:

@@ -128,16 +128,6 @@ def apply_cdc_batch(
     return survivors.unionByName(upserts)
 
 
-def split_by_method(batch: DataFrame) -> dict[str, DataFrame]:
-    """A5: group batch rows by CDC method (loader_default.go:20-26).
-
-    Returns method -> sub-frame; sinks that need per-method statements
-    (JDBC) iterate this, set-algebra sinks use apply_cdc_batch instead.
-    """
-    methods = [r[0] for r in batch.select(METHOD_COL).distinct().collect()]
-    return {m: batch.filter(F.col(METHOD_COL) == m) for m in methods}
-
-
 def align_schemas(
     target: DataFrame, batch: DataFrame, meta_cols: tuple[str, ...] = ()
 ) -> tuple[DataFrame, DataFrame]:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from migrator_spark.operators import extract as ex
@@ -51,7 +51,7 @@ class ExtractResult:
 
 
 def _finish(
-    batch: DataFrame, batch_size: int, max_col: str | None = None
+    batch: DataFrame, batch_size: int, max_col: Column | str | None = None
 ) -> tuple[DataFrame, int, bool, object]:
     """Cache the batch and compute (count[, max(max_col)]) in ONE job —
     count-then-max as separate actions doubles per-batch fixed cost,
@@ -113,26 +113,35 @@ def _ts_extract(
     cols: list[str],
 ) -> ExtractResult:
     df = source.table(spark, it.source_table)
-    pos = ts.timestamp_position_dt
+    pos, tie = ts.timestamp_position_dt, ts.timestamp_tie
     eff = F.coalesce(*[F.col(c) for c in cols]) if len(cols) > 1 else F.col(cols[0])
-    scan = df.withColumn("_order", eff)
+    scan = df.withColumn("_order", eff).withColumn(
+        "_tie", F.col(it.merge_key or cols[0]).cast("string")
+    )
+    # timestamps need not be unique: the offset is the last extracted
+    # (_order, _tie) pair, so rows tied at a full batch's max timestamp
+    # that fell past the LIMIT are extracted by the next batch
     if pos is not None:  # no offset yet -> unbounded first scan
-        scan = scan.filter(F.col("_order") > F.lit(pos))
+        past = F.col("_order") > F.lit(pos)
+        if tie is not None:  # `_order >= pos` conjunct pushes down
+            past = (F.col("_order") >= pos) & (past | (F.col("_tie") > tie))
+        scan = scan.filter(past)
     if params.only_past:
         scan = scan.filter(F.col("_order") <= F.current_timestamp())
     batch = (
-        scan.orderBy(F.col("_order").asc())
+        scan.orderBy(F.col("_order").asc(), F.col("_tie").asc())
         .limit(params.batch_size)
         .withColumn(ex.METHOD_COL, F.lit(ex.M_REPLACE))
-        .withColumn("_tie", F.col(it.merge_key or cols[0]).cast("string"))
     )
     # max of the coalesced expression — the reference's E3 computed
     # this from a nonexistent map key (its known bug); fixed here
-    cached, n, more, mx = _finish(batch, params.batch_size, max_col="_order")
+    cached, n, more, mx = _finish(
+        batch, params.batch_size, max_col=F.struct("_order", "_tie")
+    )
     new = TrackingStatus(**{**ts.__dict__})
     new.column_name = ",".join(cols)
     if n > 0:
-        new.timestamp_position = mx.isoformat()
+        new.timestamp_position, new.timestamp_tie = mx[0].isoformat(), mx[1]
     return ExtractResult(more, cached, n, new, methods=frozenset({ex.M_REPLACE}))
 
 
@@ -154,6 +163,50 @@ def extract_timestamp_fallback(spark, source, db, it, ts, params) -> ExtractResu
 
 
 QUEUE_TABLE = "MigratorRecordQueue"  # record_queue.go:24
+# every queue batch lit-tags whole arms with these (ExtractResult.methods)
+QUEUE_METHODS = frozenset({ex.M_REPLACE, ex.M_REMOVE})
+
+
+def queue_cdc_rows(
+    entries: DataFrame, src_df: DataFrame, key_cols: list[str]
+) -> DataFrame:
+    """Resolve queue entries (pkValue, timestampUpdated, method) into CDC
+    rows: ``src_df``'s columns plus ``_order``, ``_tie`` and ``_method``.
+
+    Where the reference runs one point-lookup SQL per key
+    (extractor_queue.go:74-93), the key set joins the source table in
+    ONE broadcast hash join; REMOVE entries emit key-only rows with every
+    non-key source column NULL."""
+    # comma-joined composite pkValue -> typed key columns
+    key_types = {f.name: f.dataType for f in src_df.schema.fields}
+    parts = F.split(F.col("pkValue"), ",")
+    keys = entries.select(
+        *[
+            F.element_at(parts, i + 1).cast(key_types[c]).alias(c)
+            for i, c in enumerate(key_cols)
+        ],
+        F.col("timestampUpdated").alias("_order"),
+        F.col("pkValue").alias("_tie"),
+        F.col("method"),
+    )
+    cols = [*src_df.columns, "_order", "_tie", ex.METHOD_COL]
+    updates = src_df.join(
+        F.broadcast(keys.filter(F.col("method") != "REMOVE").drop("method")),
+        on=key_cols,
+        how="inner",
+    ).withColumn(ex.METHOD_COL, F.lit(ex.M_REPLACE))
+    removes = keys.filter(F.col("method") == "REMOVE").select(
+        *key_cols,
+        *[
+            F.lit(None).cast(key_types[c]).alias(c)
+            for c in src_df.columns
+            if c not in key_cols
+        ],
+        "_order",
+        "_tie",
+        F.lit(ex.M_REMOVE).alias(ex.METHOD_COL),
+    )
+    return updates.select(*cols).unionByName(removes.select(*cols))
 
 
 @register_extractor("queue")
@@ -167,12 +220,10 @@ def extract_queue(
 ) -> ExtractResult:
     """E4 (extractor_queue.go:17-172): trigger-fed CDC queue drain.
 
-    Reads the oldest ``batch_size`` queue entries for this (db, table),
-    then — where the reference runs one point-lookup SQL per key — joins
-    the key set against the source table in ONE broadcast hash join.
-    REMOVE entries emit key-only delete rows. After a successful load the
-    runner invokes ``cleanup`` to delete the drained entries
-    (extractor_queue.go:67,130).
+    Reads the oldest ``batch_size`` queue entries for this (db, table)
+    and resolves them against the source table (``queue_cdc_rows``).
+    After a successful load the runner invokes ``cleanup`` to delete the
+    drained entries (extractor_queue.go:67,130).
 
     Differences kept deliberately: we honor params.batch_size for the
     drain LIMIT (the reference ignores it and uses the global default —
@@ -180,62 +231,20 @@ def extract_queue(
     row_count (reference counts only lookups, so pure-delete batches
     under-report ``more``).
     """
-    queue_table = params.extra.get(
-        "queue_table", params.extra.get("queue-table", QUEUE_TABLE)
-    )
+    queue_table = params.extra.get("queue_table", QUEUE_TABLE)
     queue = source.table(spark, queue_table)
     key_cols = [c.strip() for c in it.source_key.split(",")]
 
-    drained = (
-        queue.filter(
-            (F.col("sourceDatabase") == db) & (F.col("sourceTable") == it.source_table)
-        )
-        .orderBy(F.col("timestampUpdated").asc(), F.col("pkValue").asc())
-        .limit(params.batch_size)
-        .cache()
-    )
+    drained = ex.queue_drain(
+        queue, db, it.source_table, batch_size=params.batch_size, tiebreak_col="pkValue"
+    ).cache()
     n = drained.count()
     if n == 0:
         drained.unpersist()  # see _finish: stale empty cache masks new entries
         return ExtractResult(False, None, 0, TrackingStatus(**{**ts.__dict__}))
 
-    # comma-joined composite pkValue -> typed key columns
     src_df = source.table(spark, it.source_table)
-    key_types = dict((f.name, f.dataType) for f in src_df.schema.fields)
-    parts = F.split(F.col("pkValue"), ",")
-    keys = drained.select(
-        *[
-            F.element_at(parts, i + 1).cast(key_types[c]).alias(c)
-            for i, c in enumerate(key_cols)
-        ],
-        F.col("timestampUpdated").alias("_order"),
-        F.col("pkValue").alias("_tie"),
-        F.col("method"),
-    )
-
-    # live-row fetch: one broadcast equi-join instead of N point SELECTs
-    updates = (
-        src_df.join(
-            F.broadcast(
-                keys.filter(F.col("method") != "REMOVE").select(
-                    *key_cols, "_order", "_tie"
-                )
-            ),
-            on=key_cols,
-            how="inner",
-        ).withColumn(ex.METHOD_COL, F.lit(ex.M_REPLACE))
-    )
-    # REMOVE events: key-only rows, all non-key source columns null
-    non_keys = [c for c in src_df.columns if c not in key_cols]
-    removes = keys.filter(F.col("method") == "REMOVE").select(
-        *key_cols,
-        *[F.lit(None).cast(key_types[c]).alias(c) for c in non_keys],
-        "_order",
-        "_tie",
-    ).withColumn(ex.METHOD_COL, F.lit(ex.M_REMOVE))
-    batch = updates.select(*src_df.columns, "_order", "_tie", ex.METHOD_COL).unionByName(
-        removes.select(*src_df.columns, "_order", "_tie", ex.METHOD_COL)
-    ).cache()
+    batch = queue_cdc_rows(drained, src_df, key_cols).cache()
 
     def cleanup() -> None:
         # drained entries leave the queue only after the load commits.
@@ -266,5 +275,5 @@ def extract_queue(
         n,
         TrackingStatus(**{**ts.__dict__}),
         cleanup,
-        methods=frozenset({ex.M_REPLACE, ex.M_REMOVE}),
+        methods=QUEUE_METHODS,
     )

@@ -1,6 +1,7 @@
 """The CDC loader: the reference's DefaultLoader (loader_default.go:9-72,
 hard-wired in cmd/migrator/main.go:99-100) as one load body that every
-built-in loader name shares.
+built-in loader name shares. The runner calls it once per routed frame;
+``streaming.cdc_apply_stream`` calls it once per micro-batch.
 
 Each batch runs the same steps in order; the target's type picks how
 each step executes:
@@ -156,7 +157,7 @@ def load_default(
         target.merge_pruned(
             spark,
             table,
-            batch.select(key_cols[0]),
+            [r[0] for r in batch.select(key_cols[0]).distinct().collect()],
             key_cols[0],
             lambda touched: ld.apply_cdc_batch(
                 touched, rows, key_cols, "_order", "_tie"

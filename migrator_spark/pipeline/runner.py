@@ -1181,7 +1181,7 @@ class Migrator:
                 b.target.merge_pruned(
                     self.spark,
                     data_t,
-                    touched.select(lead),
+                    leads,
                     lead,
                     lambda cur: patch(cur, leads),
                     cluster_cols=gcols,

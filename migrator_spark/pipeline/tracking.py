@@ -2,7 +2,9 @@
 tracking.go:12-109).
 
 One TrackingStatus row per (source_database, source_table):
-column_name, sequential_position (int64), timestamp_position, last_run.
+column_name, sequential_position (int64), timestamp_position,
+timestamp_tie (the last extracted row's tiebreak at that timestamp),
+last_run.
 
 Storage is a JSON file per key under a tracking directory, written
 atomically (tmp + os.replace). This is driver-side bookkeeping for a
@@ -30,6 +32,9 @@ class TrackingStatus:
     sequential_position: int = 0
     timestamp_position: str | None = None  # ISO-8601, like NullTime's RFC3339
     last_run: str | None = None
+    # tiebreak of the last extracted row at timestamp_position; None
+    # resumes strictly after timestamp_position
+    timestamp_tie: str | None = None
 
     @property
     def timestamp_position_dt(self) -> datetime | None:

@@ -633,7 +633,7 @@ def l4_pruned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.merge_pruned(
         spark,
         table,
-        batch.select("c_custkey"),
+        [r[0] for r in batch.select("c_custkey").distinct().collect()],
         "c_custkey",
         lambda tdf: ld.apply_cdc_batch(tdf, batch, ["c_custkey"], "ts", "event_id"),
     )

@@ -46,6 +46,7 @@ import threading
 import time
 import uuid
 from bisect import bisect_left
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
@@ -421,13 +422,14 @@ class ParquetSource:
         self,
         spark: SparkSession,
         name: str,
-        batch_keys: DataFrame,
+        batch_keys: Iterable,
         key_col: str,
         merge_fn,
         cluster_cols: list[str] | None = None,
     ) -> MergeStats:
         """File-pruned MERGE: rewrite ONLY the part-files whose footer
-        [min, max] range of ``key_col`` intersects the batch's key set;
+        [min, max] range of ``key_col`` intersects ``batch_keys`` (the
+        batch's ``key_col`` values, collected by the caller);
         every other part-file is carried into the new table version by
         hardlink — a metadata-only operation, no data read or copied.
 
@@ -469,12 +471,8 @@ class ParquetSource:
         cluster = [F.col(c) for c in (cluster_cols or [key_col])]
         final = self._path(name)
         max_attempts = 6
+        keys = sorted({k for k in batch_keys if k is not None})
         with _lock_for(final):
-            keys = sorted(
-                r[0]
-                for r in batch_keys.select(key_col).distinct().collect()
-                if r[0] is not None
-            )
             for _ in range(max_attempts):
                 expected, _v = self.current_commit(name)
                 current = self._current_dir(name)

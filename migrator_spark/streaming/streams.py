@@ -1,14 +1,16 @@
 """Streaming operators.
 
 * cdc_apply_stream    — stream the CDC queue (file source here; Kafka/
-                        Debezium in production) and apply each micro-batch
-                        to the target with the same merge semantics as the
-                        batch loader, via foreachBatch. Offsets live in
-                        the checkpoint dir (write-ahead offset log +
-                        commit log), which is exactly the durable-FIFO +
-                        tracking machinery the reference hand-rolls
-                        (queue.go, tracking.go) — here it's free and
-                        crash-consistent.
+                        Debezium in production) and, via foreachBatch,
+                        run each micro-batch through the batch runner's
+                        queue path: the queue extractor's resolver
+                        (pipeline/extractors.queue_cdc_rows) and the CDC
+                        loader (pipeline/loaders.load_default). Offsets
+                        live in the checkpoint dir (write-ahead offset
+                        log + commit log), which is exactly the
+                        durable-FIFO + tracking machinery the reference
+                        hand-rolls (queue.go, tracking.go) — here it's
+                        free and crash-consistent.
 * windowed_event_counts — event-time tumbling-window aggregation with a
                         watermark for late data (the reference's OnlyPast
                         flag is a degenerate watermark; SURVEY.md §2.11).
@@ -27,8 +29,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from migrator_spark.operators import extract as ex
-from migrator_spark.operators import load as ld
+from migrator_spark.pipeline.config import IterationSpec, Parameters
+from migrator_spark.pipeline.extractors import QUEUE_METHODS, queue_cdc_rows
+from migrator_spark.pipeline.loaders import load_default
 from migrator_spark.sources.base import Source
 
 # ---------------------------------------------------------------------------
@@ -112,69 +115,27 @@ def cdc_apply_stream(
 
     Queue entry schema follows the reference's MigratorRecordQueue
     (FIXTURES.md §2): pkValue (comma-joined composite), timestampUpdated,
-    method ∈ {UPDATE, REMOVE}.
+    method ∈ {UPDATE, REMOVE}. The stream resolves each micro-batch
+    against ``source_table`` with ``queue_cdc_rows`` and loads each
+    micro-batch through ``pipeline/loaders.load_default``, so the
+    target's type picks the write path as in the runner: the JDBC
+    transaction, the versioned parquet overwrite, schema evolution.
     """
     reader = spark.readStream.schema(queue_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(queue_dir)
 
+    it = IterationSpec(source_table, ",".join(key_cols), target_table)
+
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        src_df = source.table(spark, source_table)
-        key_types = {f.name: f.dataType for f in src_df.schema.fields}
-        parts = F.split(F.col("pkValue"), ",")
-        keys = batch.select(
-            *[
-                F.element_at(parts, i + 1).cast(key_types[c]).alias(c)
-                for i, c in enumerate(key_cols)
-            ],
-            F.col("timestampUpdated").alias("_order"),
-            F.col("pkValue").alias("_tie"),
-            F.col("method"),
-        )
-        updates = src_df.join(
-            F.broadcast(keys.filter(F.col("method") != "REMOVE").drop("method")),
-            on=key_cols,
-            how="inner",
-        ).withColumn(ex.METHOD_COL, F.lit(ex.M_REPLACE))
-        non_keys = [c for c in src_df.columns if c not in key_cols]
-        removes = (
-            keys.filter(F.col("method") == "REMOVE")
-            .select(
-                *key_cols,
-                *[F.lit(None).cast(key_types[c]).alias(c) for c in non_keys],
-                "_order",
-                "_tie",
-            )
-            .withColumn(ex.METHOD_COL, F.lit(ex.M_REMOVE))
-        )
-        cols = [*src_df.columns, "_order", "_tie", ex.METHOD_COL]
-        cdc = updates.select(*cols).unionByName(removes.select(*cols))
-        if target.exists(spark, target_table):
-            current = target.table(spark, target_table)
-            if set(src_df.columns) != set(current.columns):
-                # additive schema evolution mid-stream (same contract
-                # as the batch loaders): the source gained or dropped
-                # a column between micro-batches; align and rewrite
-                from migrator_spark.pipeline.loaders import META_COLS
-
-                current, cdc = ld.align_schemas(current, cdc, META_COLS)
-            merged = ld.apply_cdc_batch(
-                current,
-                cdc.select(*current.columns, ex.METHOD_COL, "_order", "_tie"),
-                key_cols,
-                "_order",
-                "_tie",
-            )
-        else:
-            merged = (
-                ld.latest_by_key(cdc, key_cols, "_order", "_tie")
-                .filter(F.col(ex.METHOD_COL) != ex.M_REMOVE)
-                .select(*src_df.columns)
-            )
-        target.write(merged, target_table, mode="overwrite")
+        cdc = queue_cdc_rows(batch, source.table(spark, source_table), key_cols)
+        # the queue extractor's static method bound, as the runner
+        # forwards it: the loader runs no per-batch distinct probe
+        cdc._mig_method_bound = QUEUE_METHODS
+        load_default(spark, target, target_table, cdc, it, Parameters())
 
     writer = (
         stream.writeStream.foreachBatch(apply_batch)

@@ -135,6 +135,39 @@ def test_loader_mixed_batch_into_jdbc_keeps_untouched_rows(spark, derby, loader)
     assert got == want
 
 
+def test_cdc_stream_into_jdbc_keeps_untouched_rows(spark, derby, tmp_path):
+    """The CDC stream loads each micro-batch through the runner's loader,
+    so an UPDATE + REMOVE micro-batch into a live JDBC table changes only
+    the two touched keys instead of overwriting the table from a plan
+    that reads it."""
+    from datetime import datetime
+
+    from migrator_spark.streaming.streams import cdc_apply_stream
+
+    from .test_pipeline import Q_SCHEMA
+
+    rows = spark.range(1, 11).selectExpr("id", "id * 2 AS v")
+    derby.write(rows, "s")
+    src = ParquetSource(f"{tmp_path}/src")
+    src.write(rows.withColumn("v", F.when(F.col("id") == 3, 999).otherwise(F.col("v"))), "s")
+    qdir = f"{tmp_path}/queue"
+    spark.createDataFrame(
+        [
+            ("a", "s", "id", "3", datetime(2024, 1, 1, 12, 0, 1), "UPDATE"),
+            ("a", "s", "id", "7", datetime(2024, 1, 1, 12, 0, 2), "REMOVE"),
+        ],
+        Q_SCHEMA,
+    ).coalesce(1).write.parquet(qdir)
+    q = cdc_apply_stream(
+        spark, qdir, Q_SCHEMA, src, "s", derby, "s", ["id"],
+        checkpoint_dir=f"{tmp_path}/ckpt",
+    )
+    q.awaitTermination(120)
+    got = {r["id"]: r["v"] for r in derby.table(spark, "s").collect()}
+    assert len(got) == 9
+    assert got[3] == 999 and 7 not in got
+
+
 @pytest.mark.parametrize(
     "agg,crash", [("sum", False), ("max", False), ("max", True)],
     ids=["sum", "max", "max-apply-crash"],

@@ -110,7 +110,7 @@ def test_merge_pruned_rebases_past_concurrent_commit(spark, tmp_path, no_flock):
             src.merge_pruned(
                 spark,
                 "t",
-                spark.createDataFrame([(5,)], "id long"),
+                [5],
                 "id",
                 merge_fn,
             )

@@ -297,6 +297,26 @@ def test_timestamp_extractor_incremental(spark, dirs):
     assert rows[2] == "Brett Updated" and len(rows) == 4
 
 
+@pytest.mark.parametrize("extractor", ["timestamp", "timestamp_fallback"])
+def test_timestamp_extractor_resumes_inside_a_tie(spark, dirs, extractor):
+    """Rows sharing a full batch's max timestamp that fall past the
+    LIMIT are extracted by the next batch: the offset is the last
+    (timestamp, merge key) pair, not the timestamp alone."""
+    src_dir, tgt_dir, trk = dirs
+    tie = datetime(1950, 1, 1)
+    rows = [(1, "a", datetime(1940, 1, 1), True)] + [
+        (i, "tied", tie, True) for i in (2, 3, 4)
+    ]
+    key = "dob" if extractor == "timestamp" else "dob,dob"
+    ParquetSource(src_dir).write(spark.createDataFrame(rows, X_SCHEMA), "x")
+    cfg = _mk_config(
+        src_dir, tgt_dir, key=key, merge_key="id", extractor=extractor, batch_size=2
+    )
+    Migrator(spark, cfg, trk).run_until_drained()
+    got = sorted(r["id"] for r in ParquetSource(tgt_dir).table(spark, "x").collect())
+    assert got == [1, 2, 3, 4]
+
+
 def test_continuous_mode_lifecycle(spark, dirs):
     """start/pause/unpause/quit (state.go:5-27 analogue): rows appended
     while running are picked up by the polling loop."""

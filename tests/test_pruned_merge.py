@@ -68,7 +68,7 @@ def test_merge_pruned_touches_subset_and_matches_full_merge(spark, sf_dir, tmp_p
     stats = src.merge_pruned(
         spark,
         "c",
-        batch.select(KEY),
+        [r[0] for r in batch.select(KEY).collect()],
         KEY,
         lambda t: ld.apply_cdc_batch(t, batch, [KEY], "ord", "tie"),
     )
@@ -87,7 +87,7 @@ def test_merge_pruned_carries_untouched_files_by_hardlink(spark, sf_dir, tmp_pat
     stats = src.merge_pruned(
         spark,
         "c",
-        batch.select(KEY),
+        [r[0] for r in batch.select(KEY).collect()],
         KEY,
         lambda t: ld.apply_cdc_batch(t, batch, [KEY], "ord", "tie"),
     )
@@ -111,7 +111,7 @@ def test_merge_pruned_insert_outside_all_ranges_touches_nothing(
     stats = src.merge_pruned(
         spark,
         "c",
-        inserts.select(KEY),
+        [r[0] for r in inserts.select(KEY).collect()],
         KEY,
         lambda t: ld.apply_cdc_batch(t, inserts, [KEY], "ord", "tie"),
     )

@@ -522,7 +522,8 @@ def test_rollup_apply_file_prunes_high_cardinality(
     table range-clustered across multiple files, each batch's apply
     goes through ParquetSource.merge_pruned: part-files outside the
     touched key ranges are carried forward as hardlinks ("keep-"
-    files), so apply I/O is O(files containing touched groups)."""
+    files), so apply I/O is O(files containing touched groups), and the
+    touched group keys are collected once per apply."""
     from migrator_spark.pipeline import runner as runner_mod
 
     monkeypatch.setattr(runner_mod, "ROLLUP_GROUPS_PER_FILE", 8)
@@ -546,6 +547,19 @@ def test_rollup_apply_file_prunes_high_cardinality(
     seeded = _current_files()
     assert len(seeded) >= 4, seeded  # range-clustered multi-file seed
 
+    sc = spark.sparkContext
+    jobs = []
+    patch_rollup = m._patch_rollup
+
+    def counted(*a, **k):
+        sc.setLocalProperty("spark.jobGroup.id", "rollup-apply")
+        try:
+            return patch_rollup(*a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup("rollup-apply")))
+
+    monkeypatch.setattr(m, "_patch_rollup", counted)
     # batch B touches two adjacent keys -> at most a couple of files
     # rewrite; the rest carry forward as hardlinked "keep-" files
     _enqueue(spark, src, [(3, 3, "UPDATE"), (4, 4, "UPDATE")])
@@ -554,6 +568,11 @@ def test_rollup_apply_file_prunes_high_cardinality(
     kept = [f for f in after if f.startswith("keep-")]
     assert kept, after  # pruning engaged: untouched files carried
     assert len(after) - len(kept) <= 2, after  # only touched files rewrote
+    # the apply collects its touched groups once (1 job) and hands them
+    # to merge_pruned; the other five jobs read, patch and rewrite the
+    # slice. A second key collect inside merge_pruned adds a scan and a
+    # shuffle: 8 jobs
+    assert jobs == [6]
     # and the patched table still equals a recompute
     got = sorted(
         (r["c_custkey"], float(r["sum_val"]), r["n_rows"])

@@ -177,7 +177,7 @@ def main() -> int:
                 stats = src.merge_pruned(
                     spark,
                     "cust",
-                    batch.select("c_custkey"),
+                    [r[0] for r in batch.select("c_custkey").distinct().collect()],
                     "c_custkey",
                     lambda tdf: ld.apply_cdc_batch(
                         tdf, batch, ["c_custkey"], "ts", "event_id"
