@@ -115,9 +115,9 @@ def _ts_extract(
     df = source.table(spark, it.source_table)
     pos, tie = ts.timestamp_position_dt, ts.timestamp_tie
     eff = F.coalesce(*[F.col(c) for c in cols]) if len(cols) > 1 else F.col(cols[0])
-    scan = df.withColumn("_order", eff).withColumn(
-        "_tie", F.col(it.merge_key or cols[0]).cast("string")
-    )
+    # one string per distinct merge-key tuple (composite keys too)
+    tie_key = F.to_json(F.struct(*[F.col(c) for c in it.merge_key_cols]))
+    scan = df.withColumn("_order", eff).withColumn("_tie", tie_key)
     # timestamps need not be unique: the offset is the last extracted
     # (_order, _tie) pair, so rows tied at a full batch's max timestamp
     # that fell past the LIMIT are extracted by the next batch

@@ -99,35 +99,27 @@ def bootstrap_from_target(
 
     An existing tracking row always wins (it is the committed truth;
     the destination may legitimately be AHEAD of it mid-crash). For
-    parquet targets the max comes from part-file FOOTER statistics only
-    (sources.parquet._file_key_range) — no data pages are read, so
+    parquet targets the max comes from the FOOTER statistics of the
+    table's current version (``ParquetSource.footer_column_max``, which
+    resolves it through the commit log) — no data pages are read, so
     bootstrapping against a 100 TB destination costs one metadata pass,
-    not a table scan; other sources fall back to a distributed
-    ``agg(max(key))`` (map-side partial max, single-row result).
+    not a table scan. Keys whose footer max is not exact (string keys),
+    and other sources, fall back to a distributed ``agg(max(key))``
+    (map-side partial max, single-row result).
     """
     existing = store.get(db, table, key_col)
     if existing.last_run is not None:
         return existing
-    from migrator_spark.sources.parquet import ParquetSource, _file_key_range
+    from migrator_spark.sources.parquet import ParquetSource
 
     tgt_table = target_table or table  # tracking keys on SOURCE table
-    pos = None
     ts_pos = None
     if not target.exists(spark, tgt_table):
         return existing
+    ok = False
     if isinstance(target, ParquetSource) and timestamp_col is None:
-        import os
-
-        d = target._path(tgt_table)
-        files = (
-            [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
-            if os.path.isdir(d)
-            else [d]
-        )
-        ranges = [_file_key_range(f, key_col) for f in files]
-        if all(r is not None for r in ranges) and ranges:
-            pos = max(hi for _, hi in ranges)
-    if pos is None:
+        pos, ok = target.footer_column_max(tgt_table, key_col)
+    if not ok:
         from pyspark.sql import functions as F
 
         agg = [F.max(key_col).alias("k")]

@@ -1,19 +1,33 @@
 """Streaming operators.
 
-* cdc_apply_stream    — stream the CDC queue (file source here; Kafka/
-                        Debezium in production) and, via foreachBatch,
-                        run each micro-batch through the batch runner's
-                        queue path: the queue extractor's resolver
-                        (pipeline/extractors.queue_cdc_rows) and the CDC
-                        loader (pipeline/loaders.load_default). Offsets
-                        live in the checkpoint dir (write-ahead offset
-                        log + commit log), which is exactly the
-                        durable-FIFO + tracking machinery the reference
-                        hand-rolls (queue.go, tracking.go) — here it's
-                        free and crash-consistent.
-* windowed_event_counts — event-time tumbling-window aggregation with a
-                        watermark for late data (the reference's OnlyPast
-                        flag is a degenerate watermark; SURVEY.md §2.11).
+CDC ingest:
+
+* cdc_apply_stream — stream the CDC queue (file source here; Kafka/
+  Debezium in production) and, via foreachBatch, run each micro-batch
+  through the batch runner's queue path: the queue extractor's resolver
+  (pipeline/extractors.queue_cdc_rows) and the CDC loader
+  (pipeline/loaders.load_default). Offsets live in the checkpoint dir
+  (write-ahead offset log + commit log), the durable-FIFO + tracking
+  machinery the reference hand-rolls (queue.go, tracking.go).
+
+Stateful ingest with a versioned state table, each one ``step`` run by
+``_exactly_once_stream`` (apply the batch, then commit the state and
+the batch-id markers in one atomic write):
+
+* continuous_packing_stream — incremental sequence packing.
+* semantic_ingest_stream    — frozen-quantizer semantic dedup.
+* profiling_ingest_stream   — exact Count-Min profiling state.
+
+Stateful operators on a streaming (or, dual-mode, a batch) frame:
+
+* streaming_first_seen, dedup_within_watermark, curation_ingest_stream
+  — keyed first-arrival dedup (per-key state / watermark-bounded).
+* windowed_event_counts, interval_join — watermarked window
+  aggregation and stream-stream interval join.
+* streaming_window_funnel, watermark_reorder_buffer — the O(N)-state
+  funnel automaton and the per-key late-data reorder buffer.
+
+Sizing and state store: resolve_state_partitions, enable_rocksdb_state.
 
 Scale notes: foreachBatch receives a bounded micro-batch
 (maxFilesPerTrigger / maxOffsetsPerTrigger caps it — the reference's
@@ -23,6 +37,8 @@ the watermark horizon.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,7 +51,7 @@ from migrator_spark.pipeline.loaders import load_default
 from migrator_spark.sources.base import Source
 
 # ---------------------------------------------------------------------------
-# Stateful-operator partition sizing (round 14, VERDICT r13 #4).
+# Stateful-operator partition sizing.
 #
 # A stateful streaming operator's partition count is pinned to
 # ``spark.sql.shuffle.partitions`` AT FIRST BATCH and recorded in the
@@ -46,9 +62,12 @@ from migrator_spark.sources.base import Source
 # stream-definition analogue of AQE's size-based coalescing: partitions
 # sized by the stream's input volume, floored at half the session cores
 # (the per-group Python funnel body is real compute and wants
-# parallelism — the r13 experiment that slashed partitions below that
-# floor measured SLOWER), ceilinged at the session shuffle width (the
-# value a cluster deployment would have chosen anyway).
+# parallelism — cutting partitions below that floor measured slower),
+# ceilinged at the session shuffle width (the value a cluster
+# deployment would have chosen anyway). The caller defines and drains
+# the stream on its own ``spark.newSession()`` with the resolved width
+# set there, so the caller's session conf, and every query planned on
+# it meanwhile, keeps its own width.
 #
 # CHECKPOINT COMPATIBILITY: Spark records the shuffle-partition count
 # in the offset log and REPLAYS it on restart regardless of the session
@@ -57,7 +76,6 @@ from migrator_spark.sources.base import Source
 # tests/test_round14_properties.py). Changing the count for an existing
 # stream requires a new checkpoint + source replay.
 # ---------------------------------------------------------------------------
-STATE_PARTITIONS_CONF = "spark.migrator_spark.streaming.statePartitions"
 _STATE_ADVISORY_BYTES = 64 * 1024 * 1024  # guide §2.2: fewer, larger
 
 
@@ -65,12 +83,9 @@ def resolve_state_partitions(
     spark: SparkSession, input_bytes: int | None = None
 ) -> int:
     """State partition count for a stateful stream being DEFINED now:
-    the explicit conf when set; else size-derived
-    clamp(ceil(input_bytes / 64 MB), cores/2, shuffle partitions); else
-    the session shuffle width unchanged."""
-    explicit = spark.conf.get(STATE_PARTITIONS_CONF, None)
-    if explicit is not None:
-        return max(1, int(explicit))
+    size-derived clamp(ceil(input_bytes / 64 MB), cores/2, shuffle
+    partitions); the session shuffle width unchanged when the input
+    size is unknown."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if input_bytes is None:
         return shuffle
@@ -79,23 +94,85 @@ def resolve_state_partitions(
     return max(1, min(shuffle, max(cores // 2, derived)))
 
 
-class state_partition_scope:
-    """Apply a state-partition count for the DEFINITION + first-run
-    window of a synchronously-drained stream (set shuffle partitions,
-    restore on exit). Only the stateful operators keep the value —
-    it rides into their checkpoint; batch shuffles re-plan from the
-    restored session conf afterwards."""
+def _exactly_once_stream(
+    spark: SparkSession,
+    stream: DataFrame,
+    name: str,
+    state_root: str,
+    state_table: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    step: Callable[[DataFrame, int, "DataFrame | None"], "DataFrame | None"],
+) -> StreamingQuery:
+    """Run ``step`` on every non-empty micro-batch of ``stream``
+    exactly once across crashes and restarts.
 
-    def __init__(self, spark: SparkSession, n: int) -> None:
-        self.spark, self.n = spark, n
+    ``step(batch, batch_id, prev)`` gets the versioned state table
+    ``state_root/state_table`` without its two marker columns
+    (``None`` before the first batch) and returns the new state, or
+    ``None`` to record the markers alone. The new state plus the
+    markers — ``last_batch_id`` (long) and ``checkpoint_id`` — are
+    written as ONE atomic ``ParquetSource.write`` after ``step``
+    returns, so:
 
-    def __enter__(self) -> "state_partition_scope":
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
+    - a crash before that write replays the batch against the same
+      pre-batch state. Whatever ``step`` writes itself must be
+      deterministic per batch id (``.../batch_id=N``, mode=overwrite)
+      so the replay rewrites it instead of duplicating it;
+    - a batch whose id is already recorded is skipped: its writes are
+      known complete;
+    - batch ids restart at 0 under a fresh checkpoint dir, so state
+      recorded by a DIFFERENT checkpoint raises instead of skipping
+      (which would silently drop or double-count the new batches).
+      Legacy state without a ``checkpoint_id`` column is skipped
+      without that identity check.
+    """
+    from migrator_spark.sources.parquet import ParquetSource
 
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
+    state = ParquetSource(state_root)
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        prev = None
+        if state.exists(spark, state_table):
+            st = state.table(spark, state_table)
+            ckpt = (
+                F.max("checkpoint_id")
+                if "checkpoint_id" in st.columns
+                else F.lit(None).cast("string")
+            )
+            last, owner = st.select(F.max("last_batch_id"), ckpt).first()
+            if last is not None and batch_id <= last:
+                if owner is not None and owner != checkpoint_dir:
+                    raise RuntimeError(
+                        f"{name}: state at {state_root!r} was written by "
+                        f"checkpoint {owner!r} (last_batch_id={last}) but "
+                        f"this stream runs from {checkpoint_dir!r} — batch "
+                        f"ids restarted (got {batch_id}); "
+                        "refusing to silently double-count or drop batches. "
+                        "Reuse the original checkpoint dir or point at a "
+                        "fresh state_root."
+                    )
+                return
+            prev = st.drop("last_batch_id", "checkpoint_id")
+        new = step(batch, batch_id, prev)
+        if new is None:
+            new = spark.createDataFrame([(batch_id,)], "last_batch_id long")
+        else:
+            new = new.withColumn("last_batch_id", F.lit(batch_id).cast("long"))
+        state.write(
+            new.withColumn("checkpoint_id", F.lit(checkpoint_dir)), state_table
+        )
+
+    writer = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def cdc_apply_stream(
@@ -390,24 +467,12 @@ def continuous_packing_stream(
     shards flow in and packed-sequence manifests flow out without ever
     re-packing the corpus.
 
-    Exactly-once across crashes, by construction rather than hope:
-
-    - the per-batch manifest writes to a DETERMINISTIC partition
-      (``manifest_dir/batch_id=N``, mode=overwrite) — a replayed batch
-      rewrites the same partition byte-for-byte instead of appending a
-      duplicate;
-    - per-bucket totals + the applied batch id live in ONE versioned-
-      parquet state table (atomic symlink swap, ParquetSource), written
-      AFTER the manifest: a crash between the two writes replays the
-      batch, which re-derives the same offsets from the same pre-batch
-      totals and overwrites the same partition;
-    - a replayed batch whose id is already recorded in the state is
-      skipped outright (both writes are known complete). The skip is
-      guarded by CHECKPOINT IDENTITY (ADVICE r4 #2): batch ids restart
-      at 0 under a fresh checkpoint dir, so a restart pointed at an
-      existing ``state_root`` but a new ``checkpoint_dir`` would
-      otherwise silently drop every new batch — that mismatch raises
-      instead of skipping.
+    Exactly-once across crashes through ``_exactly_once_stream``: the
+    per-batch manifest writes to a DETERMINISTIC partition
+    (``manifest_dir/batch_id=N``, mode=overwrite), and the per-bucket
+    totals are the ``pack_state`` table committed after it — a replayed
+    batch re-derives the same offsets from the same pre-batch totals
+    and overwrites the same partition.
 
     Per batch the work is O(batch) + an n_buckets-row state read/write
     (pack_sequences' single partitioned window with the totals
@@ -427,36 +492,8 @@ def continuous_packing_stream(
     test shows the wiring.
     """
     from migrator_spark.operators.packing import pack_sequences
-    from migrator_spark.sources.parquet import ParquetSource
 
-    state = ParquetSource(state_root)
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        totals = None
-        if state.exists(spark, "pack_state"):
-            st = state.table(spark, "pack_state")
-            first = st.select(
-                F.max("last_batch_id").alias("last"),
-                F.max("checkpoint_id").alias("ckpt")
-                if "checkpoint_id" in st.columns
-                else F.lit(None).cast("string").alias("ckpt"),
-            ).first()
-            last, ckpt = first["last"], first["ckpt"]
-            if last is not None and batch_id <= last:
-                if ckpt is not None and ckpt != checkpoint_dir:
-                    raise RuntimeError(
-                        "continuous_packing_stream: state at "
-                        f"{state_root!r} was written by checkpoint "
-                        f"{ckpt!r} (last_batch_id={last}) but this "
-                        f"stream runs from {checkpoint_dir!r} — batch "
-                        f"ids restarted (got {batch_id}); refusing to "
-                        "silently drop batches. Reuse the original "
-                        "checkpoint dir or point at a fresh state_root."
-                    )
-                return  # both writes of this batch are known complete
-            totals = st.select("bucket", "tokens_packed")
+    def step(batch: DataFrame, batch_id: int, totals: DataFrame | None):
         packed = pack_sequences(
             batch.select(id_col, text_col),
             token_budget,
@@ -472,21 +509,18 @@ def continuous_packing_stream(
         if totals is not None:
             carried = totals.join(ends.select("bucket"), on="bucket", how="left_anti")
             ends = ends.unionByName(carried)
-        state.write(
-            ends.withColumn("last_batch_id", F.lit(batch_id)).withColumn(
-                "checkpoint_id", F.lit(checkpoint_dir)
-            ),
-            "pack_state",
-        )
+        return ends
 
-    writer = (
-        curated.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _exactly_once_stream(
+        spark,
+        curated,
+        "continuous_packing_stream",
+        state_root,
+        "pack_state",
+        checkpoint_dir,
+        available_now,
+        step,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def semantic_ingest_stream(
@@ -533,17 +567,14 @@ def semantic_ingest_stream(
     feels it). ``incumbents`` must be scored against the SAME
     artifact (score_against_two_level shape).
 
-    Exactly-once across crashes, the continuous_packing_stream
-    discipline: decisions write to a DETERMINISTIC partition
-    (``out_dir/batch_id=N``, overwrite), the kept vectors to
-    ``state_root/kept/batch_id=N`` (overwrite), and the applied batch
-    id + checkpoint identity to ONE versioned state table AFTER both —
-    a replayed batch reads only kept partitions < N (its own
-    half-written partition is invisible to the judgment), re-derives
-    the identical decisions, and overwrites the same partitions; a
-    batch already recorded is skipped, guarded by checkpoint identity
-    so a fresh checkpoint against old state raises instead of
-    dropping data.
+    Exactly-once across crashes through ``_exactly_once_stream``:
+    decisions write to a DETERMINISTIC partition
+    (``out_dir/batch_id=N``, overwrite) and the kept vectors to
+    ``state_root/kept/batch_id=N`` (overwrite); the ``sem_meta`` table
+    holds only the batch-id markers, committed after both. A replayed
+    batch reads only kept partitions < N (its own half-written
+    partition is invisible to the judgment), re-derives the identical
+    decisions, and overwrites the same partitions.
 
     ORDER CONTRACT (round 9, VERDICT r8 #6): the fold is
     order-DEPENDENT by SEMANTICS — incumbents win, so whoever arrives
@@ -568,11 +599,9 @@ def semantic_ingest_stream(
         score_against_centroids,
         score_against_two_level,
     )
-    from migrator_spark.sources.parquet import ParquetSource
 
     if fine_centroids is not None and not k_fine:
         raise ValueError("fine_centroids needs k_fine")
-    state = ParquetSource(state_root)
     kept_dir = os.path.join(state_root, "kept")
     cents = centroids.localCheckpoint(eager=True)
     fine = (
@@ -581,27 +610,7 @@ def semantic_ingest_stream(
         else None
     )
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if state.exists(spark, "sem_meta"):
-            st = state.table(spark, "sem_meta")
-            first = st.select(
-                F.max("last_batch_id").alias("last"),
-                F.max("checkpoint_id").alias("ckpt"),
-            ).first()
-            last, ckpt = first["last"], first["ckpt"]
-            if last is not None and batch_id <= last:
-                if ckpt is not None and ckpt != checkpoint_dir:
-                    raise RuntimeError(
-                        "semantic_ingest_stream: state at "
-                        f"{state_root!r} was written by checkpoint "
-                        f"{ckpt!r} (last_batch_id={last}) but this "
-                        f"stream runs from {checkpoint_dir!r} — batch "
-                        f"ids restarted (got {batch_id}); refusing to "
-                        "silently drop batches."
-                    )
-                return  # all three writes of this batch are complete
+    def step(batch: DataFrame, batch_id: int, _prev: DataFrame | None) -> None:
         pts = batch.select(
             F.col(id_col),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -636,22 +645,17 @@ def semantic_ingest_stream(
         decided.filter(F.col("keep")).select(
             *new_scored.columns
         ).write.mode("overwrite").parquet(f"{kept_dir}/batch_id={batch_id}")
-        state.write(
-            spark.createDataFrame(
-                [(batch_id, checkpoint_dir)],
-                "last_batch_id long, checkpoint_id string",
-            ),
-            "sem_meta",
-        )
 
-    writer = (
-        vectors.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _exactly_once_stream(
+        spark,
+        vectors,
+        "semantic_ingest_stream",
+        state_root,
+        "sem_meta",
+        checkpoint_dir,
+        available_now,
+        step,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_window_funnel(
@@ -1105,48 +1109,19 @@ def profiling_ingest_stream(
     union-merge with the bounded G·d·m-row state — the history is
     never rescanned.
 
-    Exactly-once across crashes, same discipline as
-    continuous_packing_stream: the versioned state table (atomic
-    symlink swap) carries last_batch_id + checkpoint identity; a
-    replayed batch whose id is already recorded is skipped (the swap
-    is atomic, so replay sees either the pre-batch state — and re-adds
-    the same counts — or the post-batch state and skips); a fresh
-    checkpoint pointed at existing state raises instead of silently
-    double-counting.
+    Exactly-once across crashes through ``_exactly_once_stream``: the
+    merged cells are the ``cm_state`` table, committed in one atomic
+    write with the batch-id markers, so a replay sees either the
+    pre-batch state — and re-adds the same counts — or the post-batch
+    state and skips.
 
     Serving reads the state table directly: pr11/pr12-style probes
     join the broadcast cells — the stream never blocks reads (versioned
     reads see the last committed state).
     """
     from migrator_spark.operators.quality import _cm_state
-    from migrator_spark.sources.parquet import ParquetSource
 
-    state = ParquetSource(state_root)
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        prev = None
-        if state.exists(spark, "cm_state"):
-            st = state.table(spark, "cm_state")
-            first = st.select(
-                F.max("last_batch_id").alias("last"),
-                F.max("checkpoint_id").alias("ckpt"),
-            ).first()
-            last, ckpt = first["last"], first["ckpt"]
-            if last is not None and batch_id <= last:
-                if ckpt is not None and ckpt != checkpoint_dir:
-                    raise RuntimeError(
-                        "profiling_ingest_stream: state at "
-                        f"{state_root!r} was written by checkpoint "
-                        f"{ckpt!r} (last_batch_id={last}) but this "
-                        f"stream runs from {checkpoint_dir!r} — batch "
-                        f"ids restarted (got {batch_id}); refusing to "
-                        "silently double-count. Reuse the original "
-                        "checkpoint dir or point at a fresh state_root."
-                    )
-                return  # this batch's merge is known complete
-            prev = st.select("grp", "_i", "_pos", "_c")
+    def step(batch: DataFrame, batch_id: int, prev: DataFrame | None):
         _seeds, _pos, cells = _cm_state(batch, key_col, group_col, m, d)
         if prev is not None:
             cells = (
@@ -1154,18 +1129,15 @@ def profiling_ingest_stream(
                 .groupBy("grp", "_i", "_pos")
                 .agg(F.sum("_c").alias("_c"))
             )
-        state.write(
-            cells.withColumn("last_batch_id", F.lit(batch_id)).withColumn(
-                "checkpoint_id", F.lit(checkpoint_dir)
-            ),
-            "cm_state",
-        )
+        return cells
 
-    writer = (
-        keys.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _exactly_once_stream(
+        spark,
+        keys,
+        "profiling_ingest_stream",
+        state_root,
+        "cm_state",
+        checkpoint_dir,
+        available_now,
+        step,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

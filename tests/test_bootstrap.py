@@ -36,6 +36,29 @@ def test_bootstrap_resumes_at_destination_max(spark, tmp_path):
     assert m.store.get("a", "x").sequential_position == 150
 
 
+def test_bootstrap_reads_the_committed_version(spark, tmp_path):
+    """The commit log, not the symlink, names the table's current
+    version: after a crash between the commit claim and the symlink
+    repoint, bootstrap seeds from the committed state the table reads,
+    so the next drain does not re-append rows the replica holds."""
+    import os
+
+    tgt_dir, trk = str(tmp_path / "b"), str(tmp_path / "trk")
+    schema = "id long, name string"
+    tgt = ParquetSource(tgt_dir)
+    tgt.write(spark.createDataFrame([(i, "v") for i in range(1, 11)], schema), "x")
+    first = os.path.realpath(tgt._path("x"))
+    tgt.write(spark.createDataFrame([(i, "v") for i in range(1, 21)], schema), "x")
+    # the crash window: version 2 is committed, the symlink still
+    # names version 1
+    os.remove(tgt._path("x"))
+    os.symlink(first, tgt._path("x"))
+    assert tgt.table(spark, "x").agg({"id": "max"}).first()[0] == 20
+
+    seeded = bootstrap_from_target(TrackingStore(trk), spark, tgt, "a", "x", "id")
+    assert seeded.sequential_position == 20
+
+
 def test_bootstrap_never_overrides_committed_tracking(spark, tmp_path):
     """An existing committed tracking row wins: the destination may be
     AHEAD of the offset mid-crash, and replaying is the safe choice."""

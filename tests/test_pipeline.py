@@ -297,11 +297,19 @@ def test_timestamp_extractor_incremental(spark, dirs):
     assert rows[2] == "Brett Updated" and len(rows) == 4
 
 
-@pytest.mark.parametrize("extractor", ["timestamp", "timestamp_fallback"])
-def test_timestamp_extractor_resumes_inside_a_tie(spark, dirs, extractor):
+@pytest.mark.parametrize(
+    "extractor, merge_key",
+    [
+        pytest.param("timestamp", "id", id="timestamp"),
+        pytest.param("timestamp_fallback", "id", id="timestamp_fallback"),
+        pytest.param("timestamp", "id,name", id="timestamp-composite_key"),
+    ],
+)
+def test_timestamp_extractor_resumes_inside_a_tie(spark, dirs, extractor, merge_key):
     """Rows sharing a full batch's max timestamp that fall past the
     LIMIT are extracted by the next batch: the offset is the last
-    (timestamp, merge key) pair, not the timestamp alone."""
+    (timestamp, merge key) pair, not the timestamp alone — with a
+    composite merge key, the tuple of all its columns."""
     src_dir, tgt_dir, trk = dirs
     tie = datetime(1950, 1, 1)
     rows = [(1, "a", datetime(1940, 1, 1), True)] + [
@@ -310,7 +318,7 @@ def test_timestamp_extractor_resumes_inside_a_tie(spark, dirs, extractor):
     key = "dob" if extractor == "timestamp" else "dob,dob"
     ParquetSource(src_dir).write(spark.createDataFrame(rows, X_SCHEMA), "x")
     cfg = _mk_config(
-        src_dir, tgt_dir, key=key, merge_key="id", extractor=extractor, batch_size=2
+        src_dir, tgt_dir, key=key, merge_key=merge_key, extractor=extractor, batch_size=2
     )
     Migrator(spark, cfg, trk).run_until_drained()
     got = sorted(r["id"] for r in ParquetSource(tgt_dir).table(spark, "x").collect())

@@ -154,7 +154,6 @@ def test_state_partitions_restart_from_checkpoint(spark, tmp_path):
 
     from migrator_spark.streaming.streams import (
         resolve_state_partitions,
-        state_partition_scope,
         streaming_window_funnel,
     )
 
@@ -176,8 +175,12 @@ def test_state_partitions_restart_from_checkpoint(spark, tmp_path):
             os.path.join(stage, part), os.path.join(sdir, f"{fname}.parquet")
         )
 
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(sdir)
+    def drain(width):
+        # each drain defines the stream on its own session of the
+        # given shuffle width, as st6 does
+        iso = spark.newSession()
+        iso.conf.set("spark.sql.shuffle.partitions", width)
+        stream = iso.readStream.schema(schema).parquet(sdir)
 
         def sink(df, bid):
             df.write.mode("append").parquet(odir)
@@ -194,23 +197,16 @@ def test_state_partitions_restart_from_checkpoint(spark, tmp_path):
         q.stop()
 
     feed("b0", [(1, 0, "view"), (1, 1, "click"), (2, 0, "view")])
-    with state_partition_scope(spark, 4):
-        drain()  # checkpoint pins 4 state partitions
+    drain(4)  # checkpoint pins 4 state partitions
     feed("b1", [(1, 2, "purchase"), (2, 1, "click")])
-    with state_partition_scope(spark, 8):  # different resolved value
-        drain()  # must resume from the 4-partition store
+    drain(8)  # different resolved value: must resume from the 4-partition store
     out = spark.read.parquet(odir)
     levels = {
         r["user_id"]: r["level"]
         for r in out.groupBy("user_id").agg(F.max("level").alias("level")).collect()
     }
     assert levels == {1: 3, 2: 2}
-    # the resolver contract: conf wins, else size-derived clamp
-    spark.conf.set("spark.migrator_spark.streaming.statePartitions", "5")
-    try:
-        assert resolve_state_partitions(spark, 10**12) == 5
-    finally:
-        spark.conf.unset("spark.migrator_spark.streaming.statePartitions")
+    # the resolver contract: size-derived clamp
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
     assert resolve_state_partitions(spark, 1) == max(1, min(shuffle, cores // 2))

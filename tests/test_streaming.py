@@ -1105,6 +1105,33 @@ def test_streaming_window_funnel_state_survives_restart(spark, tmp_path):
     assert final == {1: 3, 2: 1}, final
 
 
+def test_late_funnel_stream_leaves_caller_session_conf_alone(
+    spark, sf_dir, ddb, monkeypatch
+):
+    """st6 sizes its state partitions on a session of its own: the
+    caller's session conf is never set, so a query planned on it while
+    the stream drains keeps the caller's shuffle width."""
+    from migrator_spark.plans import analytics
+    from migrator_spark.plans.cdc import st6_late_funnel_stream
+
+    from .conftest import assert_frames_match
+
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    set_calls = []
+    real_set = spark.conf.set
+
+    def spy(k, v):
+        set_calls.append((k, v))
+        real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", spy)
+    out = st6_late_funnel_stream(spark, sf_dir)
+    assert [c for c in set_calls if c[0] == key] == []
+    assert spark.conf.get(key) == width
+    assert_frames_match(out, ddb.sql(analytics.EV15_ORACLE))
+
+
 def _cm_batch_cells(spark, frames, m, d):
     """Batch-built CM cells over the CONCATENATION of the given frames."""
     from migrator_spark.operators.quality import _cm_state
